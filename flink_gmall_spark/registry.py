@@ -485,57 +485,38 @@ _REGISTRATION_ORDER = tuple(_REGISTRY)
 # advances the derived window, so the ledger, a restaged
 # _SAMPLE_PRIORITY, and a cleared/updated _REVERIFY_HEAD must land in
 # ONE commit or tests/test_freshness.py fails in between.
-# Round 16 (VERDICT r15 "what's wrong" #2): the 7 entries whose
-# expressions changed in the r15 optimization session (fb58517: the
-# copurchase basket/edge rewrite + union-aggregate PageRank rounds;
-# 32fad19: the SDM window-leg fusion) were NOT restaged in r15 — their
-# only green evidence is test_parity. Restage them at the head so the
-# r16 driver verify covers them. vocab_sweep re-greened in r15
-# (CORRECTNESS_r15) — cleared. Plus the r16 optimization session's own
-# changed entries, landed in the same commits as the changes: the
-# simhash fingerprint 64-conditional-sum rewrite (simhash + its two
-# consumers) and the sweep count/hit aggregation fusions.
-_REVERIFY_HEAD = (
-    "ads_part_pagerank_deep", "ads_part_pagerank", "ads_copurchase_pairs",
-    "ads_association_rules", "ads_part_triangles", "ads_part_bfs_distances",
-    "text_sdm_topk",
-    "dedup_simhash", "dedup_simhash_pairs", "dedup_keep_best",
-    "dedup_minhash_band_tuning", "dedup_winnowing_w_sweep",
-)
+# Round 17: cleared — all 12 r16 entries greened in CORRECTNESS_r16.
+_REVERIFY_HEAD: tuple[str, ...] = ()
 
-# Round-16 window, derived by the rule above. Optimization round: zero
-# net-new registrations (no never-green entries — CORRECTNESS_r15
-# greened all of its 50); the window is the 12-entry re-verify head
-# plus pure stalest fill (r9 then r10 cohorts, registration order).
-# Restaged whenever an r16 shape change lands —
+# Round-17 window, derived by the rule above: no never-green entries and
+# an empty re-verify head, so the window is pure stalest fill (the r10
+# cohort, then the oldest r11 entries, registration order).
 # tests/test_freshness.py holds it to the rule.
 _SAMPLE_PRIORITY = [
-    # changed-code re-verification (_REVERIFY_HEAD): r15 optimization
-    # commits fb58517 + 32fad19, then this round's dedup changes
-    "ads_part_pagerank_deep", "ads_part_pagerank", "ads_copurchase_pairs",
-    "ads_association_rules", "ads_part_triangles", "ads_part_bfs_distances",
-    "text_sdm_topk",
-    "dedup_simhash", "dedup_simhash_pairs", "dedup_keep_best",
-    "dedup_minhash_band_tuning", "dedup_winnowing_w_sweep",
-    # stalest fill: last green r9, registration order
-    "ads_top_brands", "ads_hourly_stats", "ads_status_stats",
-    "ads_user_scores", "ads_keyword_weighted", "ads_totals",
-    "ads_province_rollup", "ads_visitor_ratios",
-    "ads_monthly_status_pivot", "ads_gmv_moving_avg",
-    "ads_amount_percentiles", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_connected_components",
-    "dedup_chunk_first_occurrence", "curation_bpe_pair_counts",
-    "curation_lm_score", "sim_ann_topk", "sim_embedding_neardup_lsh",
-    "sim_ivf_topk", "text_lang_id", "text_quality_scores",
-    "text_token_counts", "stream_pit_features_gated",
-    "stream_zorder_compaction", "stream_cdc_delete_aware_agg",
-    "ads_ldiversity_export", "sim_hard_negatives",
-    "curation_bpe_greedy_drift",
     # stalest fill: last green r10, registration order
-    "sim_kmeans_assign", "stream_binned_range_join",
-    "stream_config_routing", "dedup_apply_near",
-    "sim_ivf_topk_trained", "sim_hard_negatives_ivf",
-    "dedup_containment_prefix", "sim_mrl_truncation_recall",
+    "sim_ivf_cell_balance", "dedup_funnel_report",
+    "stream_containment_probe", "text_quality_threshold_sweep",
+    "sim_pq_distortion", "curation_span_corruption",
+    "stream_quality_threshold_sweep", "sim_ivf_nprobe_sweep",
+    "stream_span_corruption", "curation_bpe_fertility",
+    "dedup_dup_ngram_coverage", "curation_dataset_card",
+    "curation_global_shuffle", "curation_padding_waste",
+    "stream_padding_waste", "sim_ann_filtered_topk",
+    "sim_ivf_filtered_topk", "curation_chunk_overlap",
+    "curation_repeat_epochs", "stream_global_shuffle",
+    "stream_chunk_overlap", "stream_repeat_epochs",
+    "dedup_jaccard_prefix", "curation_pretrain_build",
+    "text_classifier_roc", "dedup_containment_apply",
+    "stream_classifier_roc", "stream_pretrain_build",
+    "dedup_winnowing_fingerprints", "dedup_winnowing_pairs",
+    "stream_winnowing_fingerprints", "sim_range_search",
+    "sim_ivf_range_search", "curation_curriculum_stages",
+    "sim_hard_negatives_ivf_sampled", "stream_ivf_range_serve",
+    "curation_preference_pairs", "dedup_winnowing_recall_report",
+    # stalest fill: last green r11, registration order
+    "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7",
+    "tpch_q8", "tpch_q10", "tpch_q13", "tpch_q14", "tpch_q15",
+    "ads_user_activity_similarity",
 ]
 assert len(_SAMPLE_PRIORITY) == 50, len(_SAMPLE_PRIORITY)
 assert len(set(_SAMPLE_PRIORITY)) == 50

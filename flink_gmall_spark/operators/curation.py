@@ -2173,7 +2173,7 @@ def filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def funnel_wide_agg(docs: DataFrame) -> DataFrame:
     """Stage conjunctions + the single wide fold — shared verbatim by the
     batch entry and the streaming twin (which runs this agg on the
-    incremental engine in complete mode)."""
+    incremental engine in complete mode; its state is five counters)."""
     from flink_gmall_spark.functions.tokenize import tokens_col
 
     langs = ", ".join(f"'{l}'" for l in FUNNEL_LANGS)
@@ -2434,8 +2434,8 @@ def span_corruption_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def span_spec_transform(docs: DataFrame) -> DataFrame:
     """The per-row masking-spec transform behind span_corruption_spec —
-    shared verbatim by the streaming twin (stream_span_corruption), so
-    ingest-time and backfill specs cannot drift."""
+    shared verbatim by the streaming twin (stream_span_corruption); the
+    seeded hash makes ingest-time and backfill specs byte-identical."""
     base = docs.select(
         "doc_id", tokens_col("text").alias("t")
     ).select("doc_id", F.size("t").cast("long").alias("n_tokens"))
@@ -2672,7 +2672,8 @@ def shuffle_shard_agg(docs: DataFrame) -> DataFrame:
     """The shard-ledger transform — shared VERBATIM by the batch entry
     and the streaming twin (both pair with ORACLE_GLOBAL_SHUFFLE) so the
     shard key expression cannot drift between the two engines. Pure
-    per-row math + one keyed aggregation; runs unchanged on a stream."""
+    per-row math + one keyed aggregation; runs unchanged on a stream
+    (complete mode, exactly 16 groups of state)."""
     keyed = docs.select(
         F.expr(
             f"md5(concat('{SHUFFLE_SEED}', CAST(doc_id AS STRING)))"
@@ -2717,7 +2718,8 @@ def padding_waste_agg(docs: DataFrame) -> DataFrame:
     MAX_SEQ_LEN. The ledger prices both against the token mass — the
     table that justifies sequence packing (curation_pack_chunks) over
     padded batching. Pure per-row integer math + one keyed aggregation;
-    works unchanged on a stream."""
+    works unchanged on a stream (complete mode, at most
+    MAX_SEQ_LEN/LEN_BUCKET + 1 groups of state)."""
     base = docs.select(
         F.size(tokens_col("text")).cast("long").alias("n_tok")
     ).select(
@@ -2779,23 +2781,16 @@ ORACLE_PADDING_WASTE = ORACLE_PADDING_WASTE.format(T=_SHUF_T)
 SEQ_LEN_SWEEP = (128, 256, 512, 1024)
 
 
-def _seq_len_base(docs: DataFrame) -> DataFrame:
-    """(n_tok) per non-empty doc — the scored input of the sequence-
-    length sweep, shared VERBATIM by the batch entry and the streaming
-    twin."""
-    return docs.select(
+def seq_len_fold(docs: DataFrame) -> DataFrame:
+    """Every candidate length priced in ONE global aggregation over the
+    per-doc n_tok of non-empty docs (the corpus is never row-duplicated
+    per L) — the 1-row wide table seq_len_finish unpivots. On the
+    stream it is the single complete-mode fold (2 + 2·|SWEEP| counters
+    of state). Truncation is not aggregated: it derives as tokens - eff
+    in the finish, since greatest(n_tok - L, 0) == n_tok - least(n_tok, L)."""
+    base = docs.select(
         F.size(tokens_col("text")).cast("long").alias("n_tok")
     ).filter(F.col("n_tok") > 0)
-
-
-def _seq_len_wide_aggs() -> list:
-    """The 2 + 2·|SWEEP| conditional aggregates of the sweep — ONE
-    corpus pass prices every candidate length (map-side partials, a
-    single global fold; the corpus is never row-duplicated per L).
-    Truncation is NOT aggregated: greatest(n_tok - L, 0) ==
-    n_tok - least(n_tok, L) identically, so trunc_tokens derives as
-    tokens - eff in the finish (review r11 — fewer hot-fold terms and
-    fewer streaming-state counters than a redundant sum)."""
     aggs = [
         F.count(F.lit(1)).cast("long").alias("docs"),
         F.sum("n_tok").cast("long").alias("tokens"),
@@ -2809,7 +2804,7 @@ def _seq_len_wide_aggs() -> list:
             .cast("long")
             .alias(f"chunks_{L}"),
         ]
-    return aggs
+    return base.agg(*aggs)
 
 
 def seq_len_finish(wide: DataFrame) -> DataFrame:
@@ -2870,7 +2865,7 @@ def seq_len_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^63 up to ~9e15 tokens — two orders past a 100 TB text corpus."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return seq_len_finish(_seq_len_base(docs).agg(*_seq_len_wide_aggs()))
+    return seq_len_finish(seq_len_fold(docs))
 
 
 def _seq_len_oracle() -> str:
@@ -3014,8 +3009,8 @@ def repeat_epochs_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
 def repeat_epochs_fold(docs: DataFrame) -> DataFrame:
     """The per-source (docs, tokens) fold — the only aggregation in the
     ledger, shared VERBATIM with the streaming twin (which runs it as a
-    complete-mode streaming agg and applies repeat_epochs_finish
-    batch-side on the memory table)."""
+    complete-mode streaming agg, |sources| groups of state, and applies
+    repeat_epochs_finish batch-side on the memory table)."""
     return (
         docs.select("source", F.size(tokens_col("text")).cast("long").alias("n_tok"))
         .groupBy("source")
@@ -3274,9 +3269,16 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py — and recorded in SCALE.md)."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return curriculum_finish(
-        _quality_scored(docs).select("doc_id", "n_tokens", "score")
-    )
+    return curriculum_finish(curriculum_scored(docs))
+
+
+def curriculum_scored(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, score) — curriculum_finish's input. Pure
+    per-row scoring, so on the stream it runs at ingest in append mode
+    with ZERO state; the stage boundaries need rank windows, which
+    cannot follow an append stream, so curriculum_finish runs
+    batch-side on the drained table."""
+    return _quality_scored(docs).select("doc_id", "n_tokens", "score")
 
 
 def curriculum_finish(base: DataFrame) -> DataFrame:
@@ -3387,9 +3389,14 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested, tests/test_properties.py; recorded in SCALE.md)."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return preference_finish(
-        _quality_scored(docs).select("doc_id", "source", "score")
-    )
+    return preference_finish(preference_scored(docs))
+
+
+def preference_scored(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, score) — preference_finish's input: the same
+    zero-state, append-mode ingest scoring as curriculum_scored; the
+    per-source rank and pairing run batch-side on the drained table."""
+    return _quality_scored(docs).select("doc_id", "source", "score")
 
 
 def preference_finish(base: DataFrame) -> DataFrame:

@@ -867,8 +867,9 @@ def intra_doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def intra_doc_transform(docs: DataFrame) -> DataFrame:
     """The pure transform behind ``intra_doc_chunk_dedup`` — shared with
-    its streaming twin (streaming.jobs.stream_intra_doc_chunks): map-only,
-    so it runs unchanged under the incremental engine in append mode."""
+    its streaming twin (stream_intra_doc_chunks): map-only, so it runs
+    unchanged under the incremental engine in append mode, and every
+    arriving document emits its deduplicated form exactly once."""
     W = CHUNK_DEDUP_W
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
         F.size("t") > 0

@@ -723,25 +723,21 @@ ORDER BY exact_ct DESC, term ASC LIMIT {FREQ_TOPK}
 SWEEP_MIN_TOKENS = (0, 5, 10, 20, 40, 80, 160, 320)
 
 
-def sweep_base_stats(docs: DataFrame) -> DataFrame:
-    """(n_tokens, stop_ct) per document — the sweep's gate terms, shared
-    by the batch entry and its streaming twin (both pair with
-    ORACLE_QUALITY_THRESHOLD_SWEEP) so the terms cannot drift between
-    the two engines. Works unchanged on a streaming DataFrame: pure
-    per-row expressions."""
+def sweep_fold(docs: DataFrame) -> DataFrame:
+    """The whole threshold grid as ONE global aggregation — the 1-row
+    wide table (d{thr} survivors, k{thr} kept tokens) sweep_stack
+    unpivots — over the per-doc gate terms (n_tokens, stop_ct), pure
+    per-row expressions. On the stream it is the single complete-mode
+    fold (|SWEEP| x 2 counters of state, constant in corpus size); the
+    stack runs batch-side on the drained row, so the live curve and the
+    backfill cannot drift."""
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
-    return docs.select(tokens_col("text").alias("t")).select(
+    base = docs.select(tokens_col("text").alias("t")).select(
         F.size("t").cast("long").alias("n_tokens"),
         F.expr(f"size(filter(t, x -> array_contains(array({stop_arr}), x)))")
         .cast("long")
         .alias("stop_ct"),
     )
-
-
-def sweep_wide_aggs() -> list:
-    """The |SWEEP| x 2 conditional aggregates (d{thr} survivors, k{thr}
-    kept tokens) over sweep_base_stats columns — one corpus pass for the
-    whole grid."""
     aggs = []
     for thr in SWEEP_MIN_TOKENS:
         keep = (
@@ -755,7 +751,7 @@ def sweep_wide_aggs() -> list:
             .cast("long")
             .alias(f"k{thr}")
         )
-    return aggs
+    return base.agg(*aggs)
 
 
 def sweep_stack(wide: DataFrame) -> DataFrame:
@@ -784,7 +780,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     |SWEEP| scans for the naive loop."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return sweep_stack(sweep_base_stats(docs).agg(*sweep_wide_aggs()))
+    return sweep_stack(sweep_fold(docs))
 
 
 _SWEEP_SQL = ", ".join(str(t) for t in SWEEP_MIN_TOKENS)
@@ -829,20 +825,22 @@ def classifier_roc_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (hash-pinned); NULL when a class is empty."""
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    return roc_finish(roc_base_stats(docs).agg(*roc_wide_aggs()))
+    return roc_finish(roc_fold(docs))
 
 
-def roc_base_stats(docs: DataFrame) -> DataFrame:
-    """Per-doc (nscore, truth) — the ROC sweep's terms, shared VERBATIM
-    by the batch entry and the streaming twin (both pair with
-    ORACLE_CLASSIFIER_ROC). Pure per-row expressions."""
+def roc_fold(docs: DataFrame) -> DataFrame:
+    """The whole confusion grid as ONE global aggregation — the 1-row
+    wide table roc_finish stacks — over per-doc (nscore, truth), pure
+    per-row expressions. On the stream it is the single complete-mode
+    fold (|GRID| x 4 counters of state); stack and rate math run
+    batch-side on the drained row."""
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
     w_arr = ", ".join(str(w) for w in CLS_WEIGHTS)
     idx = (
         f"(locate(substring(md5(tok), 1, 1), '{_HEXES}') - 1) * 16"
         f" + locate(substring(md5(tok), 2, 1), '{_HEXES}')"
     )
-    return docs.select(tokens_col("text").alias("t")).filter(
+    base = docs.select(tokens_col("text").alias("t")).filter(
         F.size("t") > 0
     ).select(
         F.size("t").cast("long").alias("n_tokens"),
@@ -861,11 +859,6 @@ def roc_base_stats(docs: DataFrame) -> DataFrame:
             & (F.col("stop_ct") >= 1)
         ).alias("truth"),
     )
-
-
-def roc_wide_aggs() -> list:
-    """The |GRID| x 4 conditional confusion aggregates — one fold for
-    the whole grid."""
     aggs = []
     for i, thr in enumerate(ROC_THRESHOLDS):
         pred = F.col("nscore") >= thr
@@ -873,7 +866,7 @@ def roc_wide_aggs() -> list:
         aggs.append(F.count(F.when(pred & ~F.col("truth"), 1)).alias(f"fp{i}"))
         aggs.append(F.count(F.when(~pred & F.col("truth"), 1)).alias(f"fn{i}"))
         aggs.append(F.count(F.when(~pred & ~F.col("truth"), 1)).alias(f"tn{i}"))
-    return aggs
+    return base.agg(*aggs)
 
 
 def roc_finish(wide: DataFrame) -> DataFrame:
@@ -1092,7 +1085,8 @@ ZIPF_LN_SCALE = 1_000_000  # ln values floor-scaled before the integer sums
 
 def corpus_cf(docs: DataFrame) -> DataFrame:
     """(tok, cf): collection frequency — ONE keyed corpus aggregation.
-    Shared by the batch entry and the streaming complete-mode fold."""
+    Shared by the batch entry and the streaming complete-mode fold
+    (|vocab| keys x one counter of state; zipf_finish runs batch-side)."""
     return (
         docs.select(F.explode(tokens_col("text")).alias("tok"))
         .groupBy("tok")

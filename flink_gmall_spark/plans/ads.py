@@ -2416,7 +2416,8 @@ def kanon_cells(cust: DataFrame) -> DataFrame:
 
 def kanon_suppress(cells: DataFrame) -> DataFrame:
     """Suppression split + reconciling fold over the bounded cell table
-    (batch side of both twins)."""
+    (batch side of both twins: suppress at publication, never in the
+    state store, so a cell crossing KANON_K later un-suppresses)."""
     ok = cells.filter(F.col("n_customers") >= KANON_K)
     supp = (
         cells.filter(F.col("n_customers") < KANON_K)

@@ -146,9 +146,9 @@ _register("udaf_activity_streaks", udaf.activity_streaks, udaf.ORACLE_ACTIVITY_S
 _register("pipeline_e2e_hourly", pipeline.pipeline_e2e_hourly, pipeline.ORACLE_PIPELINE_E2E_HOURLY, tags=("pipeline", "e2e", "S6", "T9", "A7"))
 
 # --- Streaming variants ------------------------------------------------------
-_register("stream_dedup_distinct", stream_jobs.stream_event_distinct, stream_jobs.ORACLE_EVENT_DISTINCT, tags=("dedup", "streaming", "T2"))
-_register("stream_dedup_within_watermark", stream_jobs.stream_dedup_within_watermark, stream_jobs.ORACLE_DEDUP_WITHIN_WATERMARK, tags=("dedup", "streaming", "T8", "state-bounded"))
-_register("stream_dedup_fingerprints", stream_jobs.stream_dedup_fingerprints, stream_jobs.ORACLE_DEDUP_FINGERPRINTS, tags=("dedup", "streaming", "ingestion"))
+_register("stream_dedup_distinct", stream_jobs.twin("events", stream_jobs.event_distinct, "append"), stream_jobs.ORACLE_EVENT_DISTINCT, tags=("dedup", "streaming", "T2"))
+_register("stream_dedup_within_watermark", stream_jobs.twin("events", stream_jobs.dedup_within_watermark, "append"), stream_jobs.ORACLE_DEDUP_WITHIN_WATERMARK, tags=("dedup", "streaming", "T8", "state-bounded"))
+_register("stream_dedup_fingerprints", stream_jobs.twin("documents", stream_jobs.dedup_fingerprints, "append"), stream_jobs.ORACLE_DEDUP_FINGERPRINTS, tags=("dedup", "streaming", "ingestion"))
 _register("stream_config_routing", stream_jobs.stream_config_routing, dwd.ORACLE_CONFIG_ROUTING, tags=("J4", "P5", "streaming", "broadcast-state"))
 _register("stream_j2_payment_wide", stream_jobs.stream_payment_wide, dwm.ORACLE_PAYMENT_WIDE, tags=("J2", "T4", "streaming"))
 # demoted past the 50-sample boundary in favor of stream_j2_payment_wide
@@ -235,7 +235,7 @@ _register("dws_session_windows", dws.session_windows, dws.ORACLE_SESSION_WINDOWS
 # with the batch entries prove engine parity. t3's CEP variant (SURVEY
 # §7.3 rank 1) carries its own horizon-aware oracle: the watermark-open
 # tail is excluded by an exact, engine-verified boundary rule.
-_register("stream_visitor_stats", stream_jobs.stream_visitor_stats, dws.ORACLE_VISITOR_STATS, tags=("A1", "T5", "T6", "streaming"))
+_register("stream_visitor_stats", stream_jobs.twin("events", dws.visitor_stats_transform, "complete"), dws.ORACLE_VISITOR_STATS, tags=("A1", "T5", "T6", "streaming"))
 _register("stream_product_stats", stream_jobs.stream_product_stats, dws.ORACLE_PRODUCT_STATS, tags=("A2", "streaming"))
 _register("stream_j1_order_detail_wide", stream_jobs.stream_order_detail_wide, dwm.ORACLE_ORDER_DETAIL_WIDE, tags=("J1", "T4", "streaming"))
 _register("stream_t1_visit_flag", stream_state.visit_flag_stream, dwm.ORACLE_VISIT_FLAG, tags=("T1", "streaming"))
@@ -247,9 +247,9 @@ _register("stream_t2_daily_uv", stream_state.daily_uv_stream, dwm.ORACLE_DAILY_U
 _register("stream_t3_jump_out", stream_state.jump_out_stream, stream_state.ORACLE_JUMP_OUT_STREAM, tags=("T3", "T4", "U3", "streaming", "cep"))
 _register("stream_session_windows", stream_jobs.stream_session_windows, dws.ORACLE_SESSION_WINDOWS, tags=("sessionization", "streaming"))
 _register("stream_keyword_stats", stream_jobs.stream_keyword_stats, dws.ORACLE_KEYWORD_STATS, tags=("F2", "A4", "streaming"))
-_register("stream_windowed_append", stream_jobs.stream_windowed_append, stream_jobs.ORACLE_WINDOWED_APPEND, tags=("T5", "T6", "T7", "streaming", "append-mode"))
+_register("stream_windowed_append", stream_jobs.twin("events", stream_jobs._windowed_append_stats, "append"), stream_jobs.ORACLE_WINDOWED_APPEND, tags=("T5", "T6", "T7", "streaming", "append-mode"))
 _register("stream_left_outer_join", stream_jobs.stream_left_outer_interval_join, stream_jobs.ORACLE_LEFT_OUTER_INTERVAL, tags=("J1", "T4", "streaming", "outer-join"))
-_register("stream_intra_doc_chunks", stream_jobs.stream_intra_doc_chunks, dedup.ORACLE_INTRA_DOC_CHUNKS, tags=("dedup", "streaming", "ingestion", "map-only"))
+_register("stream_intra_doc_chunks", stream_jobs.twin("documents", dedup.intra_doc_transform, "append"), dedup.ORACLE_INTRA_DOC_CHUNKS, tags=("dedup", "streaming", "ingestion", "map-only"))
 _register("stream_pq_encode", stream_jobs.stream_pq_encode, ann.ORACLE_PQ_ENCODE, tags=("similarity", "quantization", "streaming", "stream-static", "train-serve"))
 _register("stream_pq_index_serve", stream_jobs.stream_pq_index_serve, ann.ORACLE_PQ_ADC_TOPK, tags=("similarity", "quantization", "streaming", "T9", "S6", "e2e", "chained-queries"))
 _register("stream_event_transitions", stream_state.event_transitions_stream, ads.ORACLE_EVENT_TRANSITIONS, tags=("path-analysis", "markov", "streaming", "T3-generalized", "stateful"))
@@ -309,8 +309,8 @@ _register("curation_mixture_temperature", curation.mixture_temperature, curation
 _register("curation_filter_funnel", curation.filter_funnel, curation.ORACLE_FILTER_FUNNEL, tags=("curation", "quality", "observability", "single-pass"))
 _register("text_frequent_terms", textstats.frequent_terms_twopass, textstats.ORACLE_FREQUENT_TERMS, tags=("text", "heavy-hitters", "two-pass", "topk", "corpus-stats"))
 _register("ads_kanon_export", ads.kanon_export, ads.ORACLE_KANON_EXPORT, tags=("privacy", "suppression", "rollup"))
-_register("stream_filter_funnel", stream_jobs.stream_filter_funnel, curation.ORACLE_FILTER_FUNNEL, tags=("streaming", "curation", "observability", "complete-mode"))
-_register("stream_kanon_export", stream_jobs.stream_kanon_export, ads.ORACLE_KANON_EXPORT, tags=("streaming", "privacy", "suppression", "complete-mode"))
+_register("stream_filter_funnel", stream_jobs.twin("documents", curation.funnel_wide_agg, "complete", curation.funnel_ledger), curation.ORACLE_FILTER_FUNNEL, tags=("streaming", "curation", "observability", "complete-mode"))
+_register("stream_kanon_export", stream_jobs.twin("customer", ads.kanon_cells, "complete", ads.kanon_suppress), ads.ORACLE_KANON_EXPORT, tags=("streaming", "privacy", "suppression", "complete-mode"))
 _register("dwd_cdc_delete_aware_agg", dwd.cdc_delete_aware_agg, dwd.ORACLE_CDC_DELETE_AWARE_AGG, tags=("cdc", "retraction", "aggregate-maintenance"))
 _register("ads_rolling_activity_7d", ads.rolling_activity_7d, ads.ORACLE_ROLLING_ACTIVITY_7D, tags=("featurization", "range-window", "time-series"))
 _register("curation_source_overlap", curation.source_overlap_matrix, curation.ORACLE_SOURCE_OVERLAP, tags=("curation", "provenance", "dedup", "self-measurement"))
@@ -338,38 +338,38 @@ _register("stream_containment_probe", stream_jobs.stream_containment_probe, dedu
 _register("text_quality_threshold_sweep", textstats.quality_threshold_sweep, textstats.ORACLE_QUALITY_THRESHOLD_SWEEP, tags=("text", "curation", "quality", "calibration", "single-pass", "self-measurement"))
 _register("sim_pq_distortion", ann.pq_distortion_report, ann.ORACLE_PQ_DISTORTION, tags=("similarity", "pq", "index-health", "self-measurement", "decimal-exact"))
 _register("curation_span_corruption", curation.span_corruption_spec, curation.ORACLE_SPAN_CORRUPTION, tags=("curation", "ml-training", "denoising", "deterministic", "map-only"))
-_register("stream_quality_threshold_sweep", stream_jobs.stream_quality_threshold_sweep, textstats.ORACLE_QUALITY_THRESHOLD_SWEEP, tags=("streaming", "text", "curation", "calibration", "complete-mode"))
+_register("stream_quality_threshold_sweep", stream_jobs.twin("documents", textstats.sweep_fold, "complete", textstats.sweep_stack), textstats.ORACLE_QUALITY_THRESHOLD_SWEEP, tags=("streaming", "text", "curation", "calibration", "complete-mode"))
 _register("sim_ivf_nprobe_sweep", ann.ivf_nprobe_sweep, ann.ORACLE_IVF_NPROBE_SWEEP, tags=("similarity", "ivf", "calibration", "recall-ledger", "self-measurement"))
-_register("stream_span_corruption", stream_jobs.stream_span_corruption, curation.ORACLE_SPAN_CORRUPTION, tags=("streaming", "curation", "ml-training", "denoising", "map-only", "append-mode"))
+_register("stream_span_corruption", stream_jobs.twin("documents", curation.span_spec_transform, "append"), curation.ORACLE_SPAN_CORRUPTION, tags=("streaming", "curation", "ml-training", "denoising", "map-only", "append-mode"))
 _register("curation_bpe_fertility", curation.bpe_fertility_by_lang, curation.ORACLE_BPE_FERTILITY, tags=("curation", "text", "tokenizer-training", "fertility", "mixing", "self-measurement"))
 _register("dedup_dup_ngram_coverage", dedup.dup_ngram_coverage, dedup.ORACLE_DUP_NGRAM_COVERAGE, tags=("dedup", "quality", "corpus-stats", "observability"))
 _register("curation_dataset_card", curation.dataset_card_report, curation.ORACLE_DATASET_CARD, tags=("curation", "observability", "e2e", "single-pass", "self-measurement"))
 _register("dedup_minhash_band_tuning", dedup.minhash_band_tuning, dedup.ORACLE_MINHASH_BAND_TUNING, bench=True, tags=("dedup", "minhash", "lsh", "calibration", "recall-ledger", "self-measurement"))
 _register("curation_global_shuffle", curation.global_shuffle_shards, curation.ORACLE_GLOBAL_SHUFFLE, tags=("curation", "ml-training", "shuffle", "deterministic", "sharding"))
 _register("curation_padding_waste", curation.padding_waste, curation.ORACLE_PADDING_WASTE, tags=("curation", "ml-training", "batching", "packing", "observability"))
-_register("stream_padding_waste", stream_jobs.stream_padding_waste, curation.ORACLE_PADDING_WASTE, tags=("streaming", "curation", "ml-training", "batching", "complete-mode"))
+_register("stream_padding_waste", stream_jobs.twin("documents", curation.padding_waste_agg, "complete"), curation.ORACLE_PADDING_WASTE, tags=("streaming", "curation", "ml-training", "batching", "complete-mode"))
 _register("sim_ann_filtered_topk", ann.ann_filtered_topk, ann.ORACLE_ANN_FILTERED_TOPK, tags=("similarity", "ann", "filtered-search", "topk", "brute-force-baseline"))
 _register("sim_ivf_filtered_topk", ann.ivf_filtered_topk, ann.ORACLE_IVF_FILTERED_TOPK, bench=True, tags=("similarity", "ann", "filtered-search", "topk", "ivf", "pre-filter"))
 _register("curation_chunk_overlap", curation.chunk_overlap_spec, curation.ORACLE_CHUNK_OVERLAP, tags=("curation", "ml-training", "chunking", "rag", "map-only", "deterministic"))
 _register("curation_repeat_epochs", curation.repeat_epochs_ledger, curation.ORACLE_REPEAT_EPOCHS, tags=("curation", "ml-training", "mixing", "up-sampling", "observability"))
-_register("stream_global_shuffle", stream_jobs.stream_global_shuffle, curation.ORACLE_GLOBAL_SHUFFLE, tags=("streaming", "curation", "ml-training", "shuffle", "complete-mode"))
-_register("stream_chunk_overlap", stream_jobs.stream_chunk_overlap, curation.ORACLE_CHUNK_OVERLAP, tags=("streaming", "curation", "ml-training", "chunking", "map-only", "append-mode"))
-_register("stream_repeat_epochs", stream_jobs.stream_repeat_epochs, curation.ORACLE_REPEAT_EPOCHS, tags=("streaming", "curation", "ml-training", "mixing", "complete-mode"))
+_register("stream_global_shuffle", stream_jobs.twin("documents", curation.shuffle_shard_agg, "complete"), curation.ORACLE_GLOBAL_SHUFFLE, tags=("streaming", "curation", "ml-training", "shuffle", "complete-mode"))
+_register("stream_chunk_overlap", stream_jobs.twin("documents", curation.chunk_spec_transform, "append"), curation.ORACLE_CHUNK_OVERLAP, tags=("streaming", "curation", "ml-training", "chunking", "map-only", "append-mode"))
+_register("stream_repeat_epochs", stream_jobs.twin("documents", curation.repeat_epochs_fold, "complete", curation.repeat_epochs_finish), curation.ORACLE_REPEAT_EPOCHS, tags=("streaming", "curation", "ml-training", "mixing", "complete-mode"))
 _register("dedup_jaccard_prefix", dedup.jaccard_prefix_pairs, dedup.ORACLE_NGRAM_JACCARD, tags=("dedup", "jaccard", "prefix-filter", "set-similarity", "exact-filter"))
 _register("curation_pretrain_build", curation.pretrain_build, curation.ORACLE_PRETRAIN_BUILD, tags=("curation", "ml-training", "e2e", "dedup", "chunking", "sharding", "deterministic"))
 _register("text_classifier_roc", textstats.classifier_roc_sweep, textstats.ORACLE_CLASSIFIER_ROC, tags=("text", "quality", "calibration", "learned-filter", "single-pass", "self-measurement"))
 _register("dedup_containment_apply", dedup.apply_containment_dedup, dedup.ORACLE_APPLY_CONTAINMENT, tags=("dedup", "containment", "prefix-filter", "corpus-filtering"))
-_register("stream_classifier_roc", stream_jobs.stream_classifier_roc, textstats.ORACLE_CLASSIFIER_ROC, tags=("streaming", "text", "quality", "calibration", "learned-filter", "complete-mode"))
+_register("stream_classifier_roc", stream_jobs.twin("documents", textstats.roc_fold, "complete", textstats.roc_finish), textstats.ORACLE_CLASSIFIER_ROC, tags=("streaming", "text", "quality", "calibration", "learned-filter", "complete-mode"))
 
 # --- Round-10 additions (VERDICT r9 asks + coverage widening) ----------------
 _register("stream_pretrain_build", stream_jobs.stream_pretrain_build, curation.ORACLE_PRETRAIN_BUILD, tags=("streaming", "curation", "ml-training", "e2e", "dedup", "chunking", "sharding", "complete-mode"))
 _register("dedup_winnowing_fingerprints", dedup.winnowing_fingerprints, dedup.ORACLE_WINNOW_FINGERPRINTS, tags=("dedup", "fingerprinting", "winnowing", "map-only"))
 _register("dedup_winnowing_pairs", dedup.winnowing_pairs, dedup.ORACLE_WINNOW_PAIRS, bench=True, tags=("dedup", "fingerprinting", "winnowing", "near-dup"))
-_register("stream_winnowing_fingerprints", stream_jobs.stream_winnowing_fingerprints, dedup.ORACLE_WINNOW_FINGERPRINTS, tags=("streaming", "dedup", "fingerprinting", "winnowing", "map-only", "append-mode"))
+_register("stream_winnowing_fingerprints", stream_jobs.twin("documents", dedup.winnow_fingerprint_rows, "append"), dedup.ORACLE_WINNOW_FINGERPRINTS, tags=("streaming", "dedup", "fingerprinting", "winnowing", "map-only", "append-mode"))
 _register("sim_range_search", ann.range_search, ann.ORACLE_RANGE_SEARCH, tags=("similarity", "range-query", "exact", "audit-twin"))
 _register("sim_ivf_range_search", ann.ivf_range_search, ann.ORACLE_IVF_RANGE_SEARCH, bench=True, tags=("similarity", "range-query", "ivf", "recall-ledger"))
 _register("text_token_diversity", textstats.token_diversity, textstats.ORACLE_TOKEN_DIVERSITY, tags=("text", "quality", "diversity", "map-only"))
-_register("stream_token_diversity", stream_jobs.stream_token_diversity, textstats.ORACLE_TOKEN_DIVERSITY, tags=("streaming", "text", "quality", "diversity", "map-only", "append-mode"))
+_register("stream_token_diversity", stream_jobs.twin("documents", textstats.token_diversity_transform, "append"), textstats.ORACLE_TOKEN_DIVERSITY, tags=("streaming", "text", "quality", "diversity", "map-only", "append-mode"))
 _register("curation_curriculum_stages", curation.curriculum_stages, curation.ORACLE_CURRICULUM_STAGES, tags=("curation", "ml-training", "curriculum", "distributed-ntile"))
 _register("sim_hard_negatives_ivf_sampled", ann.hard_negatives_ivf_sampled, ann.ORACLE_HARD_NEGATIVES_IVF_SAMPLED, tags=("similarity", "mining", "ivf", "sampled-audit", "recall-ledger"))
 _register("stream_ivf_range_serve", stream_jobs.stream_ivf_range_serve, ann.ORACLE_IVF_RANGE_SEARCH, tags=("streaming", "similarity", "range-query", "ivf", "serving", "append-mode"))
@@ -378,16 +378,16 @@ _register("dedup_winnowing_recall_report", dedup.winnowing_recall_report, dedup.
 
 # --- Round-11 additions (VERDICT r10 asks) -----------------------------------
 _register("sim_ivf_range_search_sampled", ann.ivf_range_search_sampled, ann.ORACLE_IVF_RANGE_SEARCH_SAMPLED, tags=("similarity", "range-query", "ivf", "sampled-audit", "recall-ledger"))
-_register("stream_curriculum_stages", stream_jobs.stream_curriculum_stages, curation.ORACLE_CURRICULUM_STAGES, tags=("streaming", "curation", "ml-training", "curriculum", "distributed-ntile", "append-mode"))
-_register("stream_preference_pairs", stream_jobs.stream_preference_pairs, curation.ORACLE_PREFERENCE_PAIRS, tags=("streaming", "curation", "ml-training", "preference-pairs", "distributed-rank", "append-mode"))
+_register("stream_curriculum_stages", stream_jobs.twin("documents", curation.curriculum_scored, "append", curation.curriculum_finish), curation.ORACLE_CURRICULUM_STAGES, tags=("streaming", "curation", "ml-training", "curriculum", "distributed-ntile", "append-mode"))
+_register("stream_preference_pairs", stream_jobs.twin("documents", curation.preference_scored, "append", curation.preference_finish), curation.ORACLE_PREFERENCE_PAIRS, tags=("streaming", "curation", "ml-training", "preference-pairs", "distributed-rank", "append-mode"))
 _register("dedup_winnowing_w_sweep", dedup.winnowing_w_sweep, dedup.ORACLE_WINNOW_W_SWEEP, bench=True, tags=("dedup", "winnowing", "calibration", "recall-ledger", "self-measurement"))
 _register("stream_ivf_range_serve_sampled", stream_jobs.stream_ivf_range_serve_sampled, ann.ORACLE_IVF_RANGE_SEARCH_SAMPLED, tags=("streaming", "similarity", "range-query", "ivf", "serving", "sampled-audit", "append-mode"))
 _register("curation_seq_len_sweep", curation.seq_len_sweep, curation.ORACLE_SEQ_LEN_SWEEP, tags=("curation", "ml-training", "packing", "calibration", "single-pass"))
-_register("stream_seq_len_sweep", stream_jobs.stream_seq_len_sweep, curation.ORACLE_SEQ_LEN_SWEEP, tags=("streaming", "curation", "ml-training", "packing", "calibration", "complete-mode"))
+_register("stream_seq_len_sweep", stream_jobs.twin("documents", curation.seq_len_fold, "complete", curation.seq_len_finish), curation.ORACLE_SEQ_LEN_SWEEP, tags=("streaming", "curation", "ml-training", "packing", "calibration", "complete-mode"))
 _register("curation_dsir_weights", curation.dsir_weights, curation.ORACLE_DSIR_WEIGHTS, tags=("curation", "ml-training", "importance-sampling", "feature-hashing", "calibration"))
 _register("curation_importance_resample", curation.importance_resample, curation.ORACLE_IMPORTANCE_RESAMPLE, bench=True, tags=("curation", "ml-training", "importance-sampling", "sampling", "deterministic"))
 _register("stream_importance_resample", stream_jobs.stream_importance_resample, curation.ORACLE_IMPORTANCE_RESAMPLE, tags=("streaming", "curation", "ml-training", "importance-sampling", "serving", "complete-mode"))
-_register("stream_dsir_weights", stream_jobs.stream_dsir_weights, curation.ORACLE_DSIR_WEIGHTS, tags=("streaming", "curation", "ml-training", "importance-sampling", "feature-hashing", "complete-mode"))
+_register("stream_dsir_weights", stream_jobs.twin("documents", curation._dsir_counts, "complete", curation.dsir_weight_finish), curation.ORACLE_DSIR_WEIGHTS, tags=("streaming", "curation", "ml-training", "importance-sampling", "feature-hashing", "complete-mode"))
 _register("text_bm25_topk", retrieval.bm25_topk, retrieval.ORACLE_BM25_TOPK, bench=True, tags=("text-analysis", "retrieval", "lexical", "bm25", "top-n"))
 _register("sim_hybrid_rrf", retrieval.hybrid_rrf, retrieval.ORACLE_HYBRID_RRF, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "top-n"))
 _register("stream_bm25_serve", stream_jobs.stream_bm25_serve, retrieval.ORACLE_BM25_TOPK, tags=("streaming", "retrieval", "lexical", "bm25", "serving", "append-mode"))
@@ -410,11 +410,11 @@ _register("stream_rrf_k_sweep", stream_jobs.stream_rrf_k_sweep, retrieval.ORACLE
 _register("sim_retrieval_eval", retrieval.retrieval_eval, retrieval.ORACLE_RETRIEVAL_EVAL, tags=("similarity", "retrieval", "evaluation", "mrr", "ndcg", "self-measurement"))
 _register("stream_retrieval_eval", stream_jobs.stream_retrieval_eval, retrieval.ORACLE_RETRIEVAL_EVAL, tags=("streaming", "retrieval", "evaluation", "mrr", "ndcg", "serving", "append-mode"))
 _register("text_zipf_slope", textstats.zipf_slope, textstats.ORACLE_ZIPF_SLOPE, tags=("text", "quality", "corpus-stats", "zipf", "observability", "self-measurement"))
-_register("stream_zipf_slope", stream_jobs.stream_zipf_slope, textstats.ORACLE_ZIPF_SLOPE, tags=("streaming", "text", "quality", "corpus-stats", "zipf", "complete-mode"))
+_register("stream_zipf_slope", stream_jobs.twin("documents", textstats.corpus_cf, "complete", textstats.zipf_finish), textstats.ORACLE_ZIPF_SLOPE, tags=("streaming", "text", "quality", "corpus-stats", "zipf", "complete-mode"))
 _register("curation_lm_logprob", curation.lm_logprob_score, curation.ORACLE_LM_LOGPROB, bench=True, tags=("curation", "text", "quality", "perplexity-filter", "lm-scoring", "log-prob"))
 _register("stream_lm_logprob", stream_jobs.stream_lm_logprob, curation.ORACLE_LM_LOGPROB, tags=("streaming", "curation", "text", "quality", "perplexity-filter", "lm-scoring", "serving", "append-mode"))
 _register("text_token_entropy", textstats.token_entropy, textstats.ORACLE_TOKEN_ENTROPY, tags=("text", "quality", "diversity", "entropy", "map-only"))
-_register("stream_token_entropy", stream_jobs.stream_token_entropy, textstats.ORACLE_TOKEN_ENTROPY, tags=("streaming", "text", "quality", "diversity", "entropy", "append-mode"))
+_register("stream_token_entropy", stream_jobs.twin("documents", textstats.entropy_terms, "append", textstats.entropy_finish), textstats.ORACLE_TOKEN_ENTROPY, tags=("streaming", "text", "quality", "diversity", "entropy", "append-mode"))
 _register("text_phrase_search", retrieval.phrase_search, retrieval.ORACLE_PHRASE_SEARCH, bench=True, tags=("text-analysis", "retrieval", "lexical", "phrase", "positional-index", "plan-variant", "top-n"))
 _register("stream_phrase_serve", stream_jobs.stream_phrase_serve, retrieval.ORACLE_PHRASE_SEARCH, tags=("streaming", "retrieval", "lexical", "phrase", "positional-index", "serving", "append-mode"))
 _register("sim_rrf_weighted", retrieval.rrf_weighted, retrieval.ORACLE_RRF_WEIGHTED, tags=("similarity", "retrieval", "hybrid", "rank-fusion", "weighted", "three-system"))

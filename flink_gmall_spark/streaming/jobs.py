@@ -1,10 +1,11 @@
 """Structured Streaming jobs over the same tables.
 
 Each reference Flink job is one streaming query here (SURVEY §3.1): the
-batch plans in ``plans.dws`` are pure DataFrame transforms, so the stream
-jobs apply the *identical* transform to a ``readStream`` source and sink
-via availableNow triggers — batch/stream parity is by construction, and
-the DuckDB oracles double-check it.
+batch plans are pure DataFrame transforms, so a stream job applies the
+*identical* transform to a ``readStream`` source and sinks via
+availableNow triggers — ``twin()`` builds such an entry from the batch
+transform alone, and only jobs whose stream shape differs are written
+out below. Parity is by construction; the DuckDB oracles check it.
 
 Production sources/sinks would be Kafka (``format("kafka")`` with a topic
 column for per-row routing, SURVEY §2.1 S3); tests and the driver use the
@@ -18,11 +19,11 @@ import itertools
 import os
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.plans.dws import visitor_stats_transform
 from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources.tables import normalize_timestamps
 from flink_gmall_spark.sources.tables import path as table_path
@@ -225,6 +226,25 @@ def run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
     )
     q.awaitTermination()
     return spark.table(name)
+
+
+def twin(
+    table: str, fold: Callable[[DataFrame], DataFrame], mode: str, finish=None
+) -> Callable[[SparkSession, str], DataFrame]:
+    """A registry entry that runs a batch transform on the incremental
+    engine: ``fold`` — the batch entry's own DataFrame transform —
+    applied unchanged to ``read_stream(table)`` and drained by
+    ``run_to_memory`` in output ``mode``. ``finish`` runs batch-side on
+    the drained table, for the steps a streaming query cannot hold
+    after its aggregation (rank windows, stack unpivots, row math).
+    The batch entry's DuckDB oracle then checks the stream."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tune(spark)
+        drained = run_to_memory(fold(read_stream(spark, sf_dir, table)), mode)
+        return drained if finish is None else finish(drained)
+
+    return run
 
 
 def run_to_memory_drain(
@@ -481,19 +501,6 @@ def stream_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(result, "complete")
 
 
-def stream_visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The A1 windowed visitor-stats aggregation executed by the
-    incremental streaming engine (state store + complete output), not the
-    batch planner. Same transform function, same oracle — this is the
-    engine-parity proof for the reference's flagship DWS job
-    (VisitorStatsApp). uv is the scale-safe two-phase exact distinct
-    (dropDuplicates on the (window, user) pair then a windowed SUM) —
-    legal as chained stateful operators where COUNT(DISTINCT) is not."""
-    tune(spark)
-    ev = read_stream(spark, sf_dir, "events")
-    return run_to_memory(visitor_stats_transform(ev), "complete")
-
-
 def stream_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 tokenizer + A4 keyword counting on the incremental engine
     (KeywordStatsApp's shape as one streaming query). Tokenization stays
@@ -527,7 +534,7 @@ def stream_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, "complete")
 
 
-def stream_event_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+def event_distinct(ev: DataFrame) -> DataFrame:
     """Streaming exact deduplication: state-store-backed dropDuplicates
     over the event stream — the unbounded-dedup primitive behind the
     reference's UV-style jobs, applied to (user_id, event_type).
@@ -537,12 +544,9 @@ def stream_event_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact. In production the same query runs with a watermark +
     dropDuplicatesWithinWatermark to bound state; with availableNow over
     a finite fixture the unbounded form is deterministic."""
-    tune(spark)
-    ev = read_stream(spark, sf_dir, "events")
-    res = ev.select("user_id", "event_type").dropDuplicates(
+    return ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return run_to_memory(res, "append")
 
 
 ORACLE_EVENT_DISTINCT = """
@@ -550,7 +554,7 @@ SELECT DISTINCT user_id, event_type FROM events
 """
 
 
-def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_within_watermark(ev: DataFrame) -> DataFrame:
     """T8-class state-BOUNDED streaming dedup: ``dropDuplicatesWithinWatermark``
     keyed on (user_id, event_type, day) — the production form whose
     per-key state is EVICTED once the watermark passes the first
@@ -565,15 +569,14 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     watermark node, state store + event-time timers) rather than the
     unbounded dropDuplicates.
     """
-    tune(spark)
-    ev = read_stream(spark, sf_dir, "events").withWatermark("ts", "365 days")
+    ev = ev.withWatermark("ts", "365 days")
     res = ev.select(
         "user_id",
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("d"),
         "ts",
     ).dropDuplicatesWithinWatermark(["user_id", "event_type", "d"])
-    return run_to_memory(res.select("user_id", "event_type", "d"), "append")
+    return res.select("user_id", "event_type", "d")
 
 
 ORACLE_DEDUP_WITHIN_WATERMARK = """
@@ -612,7 +615,11 @@ WM_DELAY_S = 60  # watermark delay for the append-mode windowed entry
 
 def _windowed_append_stats(ev: DataFrame) -> DataFrame:
     """The append-mode tumbling pv/uv transform shared by the memory-sink
-    entry and the epoch-sink producer of the chained ADS entry."""
+    entry and the epoch-sink producer of the chained ADS entry. Append
+    mode is the production emission contract (T7): a window row emits
+    once, when the watermark passes its end, and is never updated.
+    Over a finite input the final watermark is max(ts) − WM_DELAY_S,
+    and ORACLE_WINDOWED_APPEND encodes that same horizon."""
     from flink_gmall_spark.plans.dws import VISITOR_WINDOW_SECONDS
 
     ev = ev.withWatermark("ts", f"{WM_DELAY_S} seconds")
@@ -639,20 +646,6 @@ def _windowed_append_stats(ev: DataFrame) -> DataFrame:
         "pv",
         "uv",
     )
-
-
-def stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling windows in APPEND output mode — the production emission
-    contract (T7): a window row is emitted exactly once, when the
-    watermark passes its end, and never updated again (what the
-    reference's 10 s windows + ClickHouse append-only tables rely on).
-    With availableNow over the finite fixture the final watermark lands
-    at max(ts) − delay, so the emitted set is exactly the windows whose
-    end ≤ that horizon; the oracle encodes the same boundary rule, making
-    watermark semantics themselves hash-checked."""
-    tune(spark)
-    ev = read_stream(spark, sf_dir, "events")
-    return run_to_memory(_windowed_append_stats(ev), "append")
 
 
 def _oracle_windowed_append() -> str:
@@ -763,20 +756,17 @@ SELECT * FROM unmatched
 """
 
 
-def stream_dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_fingerprints(docs: DataFrame) -> DataFrame:
     """Streaming ingestion dedup on content: the document stream deduped
     by normalized-text fingerprint in the state store — what a crawl
     ingestion pipeline runs so re-fetched pages never reach the corpus
-    twice. Output is the distinct fingerprint set (with its doc count
-    folded in batch afterwards would break streaming purity; the set
-    itself is arrival-order-independent, so the DISTINCT oracle is
-    exact). Production bounds state with dropDuplicatesWithinWatermark."""
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    fp = docs.select(
+    twice. Output is the distinct fingerprint set (folding a doc count
+    in afterwards would break streaming purity; the set itself is
+    arrival-order-independent, so the DISTINCT oracle is exact).
+    Production bounds state with dropDuplicatesWithinWatermark."""
+    return docs.select(
         F.md5(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))).alias("fp")
     ).dropDuplicates(["fp"])
-    return run_to_memory(fp, "append")
 
 
 ORACLE_DEDUP_FINGERPRINTS = r"""
@@ -1327,21 +1317,6 @@ GROUP BY 1
 ORACLE_ADS_HOURLY_FROM_SINK = _oracle_ads_hourly_from_sink()
 
 
-def stream_intra_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation at INGEST time: the intra-document chunk dedup transform
-    (operators.dedup.intra_doc_transform) running on the document stream —
-    map-only, so the incremental engine executes it stateless in append
-    mode; every arriving document emits its deduplicated form exactly
-    once. This is how a production crawl pipeline applies per-doc
-    cleaning: in the ingest stream, not a nightly batch. Shares the batch
-    twin's oracle verbatim (engine parity proof)."""
-    tune(spark)
-    from flink_gmall_spark.operators.dedup import intra_doc_transform
-
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(intra_doc_transform(docs), "append")
-
-
 def stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encoding at INGEST time — the stream-static form a production
     vector pipeline runs: the codebook is TRAINED OFFLINE (here the
@@ -1411,42 +1386,6 @@ def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "sub_id", "code"
     )
     return adc_topk_from_codes(index, e_static)
-
-
-def stream_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation.filter_funnel — the curation pipeline's
-    survival ledger maintained CONTINUOUSLY by the incremental engine:
-    the stage-conjunction wide agg (shared verbatim with the batch twin)
-    runs as a complete-mode streaming aggregation whose state is five
-    counters total; the stack()-unpivot arithmetic runs batch-side on
-    the 1-row materialization. This is the live data-quality dashboard a
-    100 TB ingest keeps current per micro-batch instead of recomputing
-    nightly. Shares the batch oracle verbatim."""
-    from flink_gmall_spark.operators.curation import funnel_ledger, funnel_wide_agg
-    from flink_gmall_spark.session import tune
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    mem = run_to_memory(funnel_wide_agg(docs), "complete")
-    return funnel_ledger(mem)
-
-
-def stream_kanon_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ads.kanon_export: the bounded cell aggregation
-    (nation × segment counts + DECIMAL-cents balance) runs as a
-    complete-mode streaming agg — per-key state is one counter pair over
-    a bounded key domain — and the privacy suppression split + fold run
-    batch-side on the materialized cells, exactly where an export gate
-    sits in a live pipeline (suppress at PUBLICATION time, never in the
-    state store, so a cell crossing the K threshold later un-suppresses
-    correctly). Shares the batch oracle verbatim."""
-    from flink_gmall_spark.plans.ads import kanon_cells, kanon_suppress
-    from flink_gmall_spark.session import tune
-
-    tune(spark)
-    cust = read_stream(spark, sf_dir, "customer")
-    mem = run_to_memory(kanon_cells(cust), "complete")
-    return kanon_suppress(mem)
 
 
 def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1697,126 +1636,6 @@ def stream_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of text_quality_threshold_sweep — the LIVE
-    calibration curve: the document stream folds the whole threshold
-    grid through ONE global streaming aggregation (|SWEEP| x 2
-    conditional aggregates in a single complete-mode fold — the only
-    agg Spark allows on the stream), and the stack to (min_tokens,
-    n_docs, kept_tokens) rows happens batch-side on the memory table.
-    A pipeline owner watches this to see the curve settle as a backfill
-    streams in; the gate terms, grid aggregates, and stack come from
-    textstats' sweep_* helpers, shared VERBATIM with the batch entry, so
-    the two engines cannot drift; shares ORACLE_QUALITY_THRESHOLD_SWEEP."""
-    from flink_gmall_spark.operators.textstats import (
-        sweep_base_stats,
-        sweep_stack,
-        sweep_wide_aggs,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    wide = sweep_base_stats(docs).agg(*sweep_wide_aggs())
-    return sweep_stack(run_to_memory(wide, "complete"))
-
-
-def stream_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_span_corruption — the masking spec
-    computed AT INGEST: the block-mask ledger is pure per-row expression
-    math (zero aggregation, zero join), so the streaming plan is the
-    batch plan run per micro-batch in append mode, and the seeded hash
-    guarantees the stream and any batch backfill pick byte-identical
-    spans — the property that makes corruption targets cacheable across
-    the two paths. The transform is curation.span_spec_transform, shared
-    VERBATIM with the batch entry; shares ORACLE_SPAN_CORRUPTION too."""
-    from flink_gmall_spark.operators.curation import span_spec_transform
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(span_spec_transform(docs), "append")
-
-
-def stream_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_padding_waste — the batch-efficiency
-    ledger maintained LIVE as a backfill streams in: per-row integer
-    math plus one keyed complete-mode aggregation on bucket_hi (bounded
-    state: at most MAX_SEQ_LEN/LEN_BUCKET + 1 groups). The transform is
-    curation.padding_waste_agg, shared VERBATIM with the batch entry;
-    shares ORACLE_PADDING_WASTE too."""
-    from flink_gmall_spark.operators.curation import padding_waste_agg
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(padding_waste_agg(docs), "complete")
-
-
-def stream_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_global_shuffle — the shard-balance
-    ledger maintained LIVE during an ingest: the seeded-hash shard key
-    is per-row math, the ledger one keyed complete-mode aggregation with
-    exactly 16 groups of state. An operator watches this to confirm the
-    incoming corpus hash-ranges evenly BEFORE submitting the physical
-    range rewrite. The transform is curation.shuffle_shard_agg, shared
-    VERBATIM with the batch entry; shares ORACLE_GLOBAL_SHUFFLE too."""
-    from flink_gmall_spark.operators.curation import shuffle_shard_agg
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(shuffle_shard_agg(docs), "complete")
-
-
-def stream_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_chunk_overlap — the sliding-window
-    chunk spec computed AT INGEST: pure per-row expression math plus one
-    sequence() explode, so the streaming plan is the batch plan run per
-    micro-batch in append mode, and the integer start arithmetic makes
-    stream and backfill emit byte-identical specs. The transform is
-    curation.chunk_spec_transform, shared VERBATIM with the batch
-    entry; shares ORACLE_CHUNK_OVERLAP too."""
-    from flink_gmall_spark.operators.curation import chunk_spec_transform
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(chunk_spec_transform(docs), "append")
-
-
-def stream_repeat_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_repeat_epochs — the up-sampling ledger
-    maintained LIVE: the per-source (docs, tokens) fold is the one
-    streaming aggregation (complete mode, |sources| groups of state),
-    shared VERBATIM via curation.repeat_epochs_fold; the epoch/shortfall
-    row math applies batch-side on the memory table through
-    curation.repeat_epochs_finish. Shares ORACLE_REPEAT_EPOCHS."""
-    from flink_gmall_spark.operators.curation import (
-        repeat_epochs_finish,
-        repeat_epochs_fold,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return repeat_epochs_finish(run_to_memory(repeat_epochs_fold(docs), "complete"))
-
-
-def stream_classifier_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of text_classifier_roc — the learned-filter
-    calibration curve maintained LIVE as a backfill streams in: the
-    whole confusion grid folds through ONE complete-mode aggregation
-    (|GRID| x 4 counters of state), the stack and rate math apply
-    batch-side on the memory table. All terms come from textstats'
-    roc_* helpers, shared VERBATIM with the batch entry; shares
-    ORACLE_CLASSIFIER_ROC too."""
-    from flink_gmall_spark.operators.textstats import (
-        roc_base_stats,
-        roc_finish,
-        roc_wide_aggs,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    wide = roc_base_stats(docs).agg(*roc_wide_aggs())
-    return roc_finish(run_to_memory(wide, "complete"))
-
-
 def stream_pretrain_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of curation_pretrain_build (VERDICT r9 ask #7) —
     the capstone build maintained INCREMENTALLY as a backfill streams
@@ -1857,39 +1676,6 @@ def stream_pretrain_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of dedup_winnowing_fingerprints — document
-    fingerprints computed AT INGEST: winnowing is pure per-row array
-    math (hash transform, window-min, distinct, explode — zero
-    aggregation, zero join), so the streaming plan is the batch plan run
-    per micro-batch in append mode, and the md5 arithmetic makes stream
-    and backfill emit byte-identical fingerprint rows — the property
-    that lets a live ingest append straight into the batch-built
-    fingerprint index. The transform is dedup.winnow_fingerprint_rows,
-    shared VERBATIM with the batch entry; shares
-    ORACLE_WINNOW_FINGERPRINTS too."""
-    from flink_gmall_spark.operators.dedup import winnow_fingerprint_rows
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(winnow_fingerprint_rows(docs), "append")
-
-
-def stream_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of text_token_diversity — the lexical-diversity
-    gate signals computed AT INGEST: the per-doc token histogram lives
-    inside the row (zero aggregation, zero join), so the streaming plan
-    is the batch plan run per micro-batch in append mode and the
-    integer arithmetic makes stream and backfill emit byte-identical
-    rows. The transform is textstats.token_diversity_transform, shared
-    VERBATIM with the batch entry; shares ORACLE_TOKEN_DIVERSITY too."""
-    from flink_gmall_spark.operators.textstats import token_diversity_transform
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return run_to_memory(token_diversity_transform(docs), "append")
-
-
 def stream_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of curation_lm_logprob — the perplexity-filter
     deployment shape (the stream_importance_resample precedent): the
@@ -1917,42 +1703,6 @@ def stream_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_logprob_finish(run_to_memory(served, "append"))
 
 
-def stream_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of text_zipf_slope — the corpus-frequency fold
-    (textstats.corpus_cf, shared VERBATIM) runs as a complete-mode
-    streaming aggregation (|vocab| keys × one counter of state); the
-    bounded top-N selection and the integer least-squares fit apply
-    batch-side on the drained cf table via textstats.zipf_finish (also
-    shared — rank windows cannot follow a streaming agg). Shares
-    ORACLE_ZIPF_SLOPE: the live diagnostic equals the backfill's by
-    contract."""
-    from flink_gmall_spark.operators.textstats import corpus_cf, zipf_finish
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return zipf_finish(run_to_memory(corpus_cf(docs), "complete"))
-
-
-def stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_dsir_weights — the importance
-    estimator maintained LIVE as the backfill streams in: the 256-key
-    conditional count aggregation folds complete-mode
-    (curation._dsir_counts shared VERBATIM; <= HASH_DIM keys x 2
-    counters of state), the bucket fill / totals / smoothed-ratio math
-    applies batch-side on the drained count table via
-    curation.dsir_weight_finish (also shared — window math cannot
-    follow a streaming agg). Shares ORACLE_DSIR_WEIGHTS: live and
-    backfilled weight tables are hash-identical by contract."""
-    from flink_gmall_spark.operators.curation import (
-        _dsir_counts,
-        dsir_weight_finish,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return dsir_weight_finish(run_to_memory(_dsir_counts(docs), "complete"))
-
-
 def stream_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of curation_importance_resample — the DSIR
     deployment shape: importance weights estimated OFFLINE on the
@@ -1975,70 +1725,6 @@ def stream_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     warr = _dsir_warr(load(spark, sf_dir, "documents"))
     docs = read_stream(spark, sf_dir, "documents")
     return run_to_memory(_dsir_ledger(_dsir_scored(docs, warr)), "complete")
-
-
-def stream_seq_len_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_seq_len_sweep — the sequence-length
-    calibration table maintained LIVE as a backfill streams in: the
-    whole sweep folds through ONE complete-mode global aggregation
-    (2 + 3·|SWEEP| counters of state — constant), the stack unpivot and
-    ratio math apply batch-side on the one-row memory table. Every
-    stage (_seq_len_base / _seq_len_wide_aggs / seq_len_finish) is
-    shared VERBATIM with the batch entry; shares ORACLE_SEQ_LEN_SWEEP
-    too — the stream_classifier_roc pattern."""
-    from flink_gmall_spark.operators.curation import (
-        _seq_len_base,
-        _seq_len_wide_aggs,
-        seq_len_finish,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    wide = _seq_len_base(docs).agg(*_seq_len_wide_aggs())
-    return seq_len_finish(run_to_memory(wide, "complete"))
-
-
-def stream_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_curriculum_stages (VERDICT r10 ask
-    #5) — the curriculum schedule maintained over a live backfill. The
-    quality scoring is pure per-row expression math
-    (curation._quality_scored, shared VERBATIM), so it runs AT INGEST
-    in append mode with ZERO streaming state — the stream_token_diversity
-    discipline; the stage boundaries and per-stage ledger apply
-    batch-side on the drained scored table via
-    curation.curriculum_finish (shared VERBATIM — rank windows cannot
-    follow an append stream), exactly as stream_ivf_range_serve finishes
-    its ranks. Shares ORACLE_CURRICULUM_STAGES, so stream and batch
-    schedules are hash-identical by contract."""
-    from flink_gmall_spark.operators.curation import (
-        _quality_scored,
-        curriculum_finish,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    scored = _quality_scored(docs).select("doc_id", "n_tokens", "score")
-    return curriculum_finish(run_to_memory(scored, "append"))
-
-
-def stream_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of curation_preference_pairs (VERDICT r10 ask #7)
-    — the DPO-style pair mine maintained over a live backfill. Scoring
-    is the same ZERO-state append-mode ingest map
-    (curation._quality_scored, shared VERBATIM); the per-source
-    distributed rank and nested pairing apply batch-side on the drained
-    scored table via curation.preference_finish (shared VERBATIM).
-    Shares ORACLE_PREFERENCE_PAIRS, so stream and batch mines are
-    hash-identical by contract."""
-    from flink_gmall_spark.operators.curation import (
-        _quality_scored,
-        preference_finish,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    scored = _quality_scored(docs).select("doc_id", "source", "score")
-    return preference_finish(run_to_memory(scored, "append"))
 
 
 def stream_ivf_range_serve(
@@ -2324,23 +2010,6 @@ def stream_retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triplets_finish(
         bm25_finish(run_to_memory(served, "append")), docs_static
     )
-
-
-def stream_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of text_token_entropy — the per-doc histogram and
-    the ln-ready term rows are computed AT INGEST (entropy_terms is
-    row-local: zero join, zero state, append-safe); the per-doc fold
-    applies batch-side on the drained term table via
-    textstats.entropy_finish (shared VERBATIM — the group-by cannot run
-    in append mode). Shares ORACLE_TOKEN_ENTROPY."""
-    from flink_gmall_spark.operators.textstats import (
-        entropy_finish,
-        entropy_terms,
-    )
-
-    tune(spark)
-    docs = read_stream(spark, sf_dir, "documents")
-    return entropy_finish(run_to_memory(entropy_terms(docs), "append"))
 
 
 def stream_bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -806,10 +806,10 @@ def test_zipf_two_phase_top_n_plan(spark, sf_dir):
 
 def test_stream_zipf_slope_equals_batch(spark, sf_dir):
     from flink_gmall_spark.operators import textstats as T
-    from flink_gmall_spark.streaming.jobs import stream_zipf_slope
+    from flink_gmall_spark.registry import queries
 
     batch = sorted(map(tuple, T.zipf_slope(spark, sf_dir).collect()))
-    served = sorted(map(tuple, stream_zipf_slope(spark, sf_dir).collect()))
+    served = sorted(map(tuple, queries()["stream_zipf_slope"](spark, sf_dir).collect()))
     assert batch == served
 
 
@@ -896,11 +896,11 @@ def test_token_entropy_matches_python(spark, sf_dir):
 
 def test_stream_token_entropy_equals_batch(spark, sf_dir):
     from flink_gmall_spark.operators import textstats as T
-    from flink_gmall_spark.streaming.jobs import stream_token_entropy
+    from flink_gmall_spark.registry import queries
 
     batch = sorted(map(tuple, T.token_entropy(spark, sf_dir).collect()))
     served = sorted(
-        map(tuple, stream_token_entropy(spark, sf_dir).collect())
+        map(tuple, queries()["stream_token_entropy"](spark, sf_dir).collect())
     )
     assert batch == served
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pandas as pd
 
 from flink_gmall_spark.plans import dwm, dws
+from flink_gmall_spark.registry import queries
 from flink_gmall_spark.streaming import jobs, state
 from tests.oracle import normalize
 
@@ -16,7 +17,7 @@ def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
 
 
 def test_stream_visitor_stats_matches_batch(spark, sf_dir):
-    got = jobs.stream_visitor_stats(spark, sf_dir).toPandas()
+    got = queries()["stream_visitor_stats"](spark, sf_dir).toPandas()
     want = dws.visitor_stats(spark, sf_dir).toPandas()
     assert frames_equal(got, want)
 
@@ -270,7 +271,7 @@ def test_stream_ads_hourly_from_sink_matches_direct_rollup(spark, sf_dir):
     import pandas as pd
 
     got = jobs.stream_ads_hourly_from_sink(spark, sf_dir).toPandas()
-    direct = jobs.stream_windowed_append(spark, sf_dir).toPandas()
+    direct = queries()["stream_windowed_append"](spark, sf_dir).toPandas()
     direct["hr"] = pd.to_datetime(direct["stt"]).dt.hour.astype("int64")
     want = (
         direct.groupby("hr", as_index=False)
@@ -1076,3 +1077,45 @@ def test_write_ordered_parts_replay_order_contract(tmp_path):
     assert all(p.exists() for p in paths)
     mtimes = [os.stat(p).st_mtime for p in paths]
     assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
+
+
+def test_stream_twins_are_built_by_twin():
+    """A stream twin that only runs a batch transform over one stream
+    is a jobs.twin(...) registry row, not a hand-written stream_*
+    function; and every twin() entry shares its oracle with a batch
+    (non-stream_) entry — it IS that entry's twin — unless its fold is a
+    stream-only transform defined in jobs.py next to its own oracle."""
+    import ast
+    import inspect
+
+    from flink_gmall_spark.registry import registry
+
+    def twin_shaped(fn) -> bool:
+        # tune + one read_stream + one run_to_memory + at most three more
+        # calls (a fold, one method on it, a finish): what twin() builds
+        names = [
+            c.func.id if isinstance(c.func, ast.Name) else getattr(c.func, "attr", None)
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call)
+        ]
+        once = ("tune", "read_stream", "run_to_memory")
+        return all(names.count(k) == 1 for k in once) and len(names) <= 6
+
+    shaped = [
+        n.name
+        for n in ast.parse(inspect.getsource(jobs)).body
+        if isinstance(n, ast.FunctionDef)
+        and n.name.startswith("stream_")
+        and twin_shaped(n)
+    ]
+    assert not shaped, f"hand-written twins; register jobs.twin(...) instead: {shaped}"
+
+    twin_code = jobs.twin("events", lambda df: df, "append").__code__
+    reg = registry()
+    batch_oracles = {q.oracle for n, q in reg.items() if not n.startswith("stream_")}
+    twins = {n: q for n, q in reg.items() if getattr(q.fn, "__code__", None) is twin_code}
+    assert len(twins) >= 23, sorted(twins)
+    for name, q in twins.items():
+        fold = inspect.getclosurevars(q.fn).nonlocals["fold"]
+        if fold.__module__ != jobs.__name__:
+            assert q.oracle in batch_oracles, name

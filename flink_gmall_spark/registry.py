@@ -485,7 +485,8 @@ _REGISTRATION_ORDER = tuple(_REGISTRY)
 # advances the derived window, so the ledger, a restaged
 # _SAMPLE_PRIORITY, and a cleared/updated _REVERIFY_HEAD must land in
 # ONE commit or tests/test_freshness.py fails in between.
-# Round 17: cleared — all 12 r16 entries greened in CORRECTNESS_r16.
+# Round 17: cleared — all 12 r16 entries greened in CORRECTNESS_r16;
+# moving 23 stream twins onto twin() left their plans unchanged.
 _REVERIFY_HEAD: tuple[str, ...] = ()
 
 # Round-17 window, derived by the rule above: no never-green entries and

@@ -231,13 +231,13 @@ def run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
 def twin(
     table: str, fold: Callable[[DataFrame], DataFrame], mode: str, finish=None
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """A registry entry that runs a batch transform on the incremental
-    engine: ``fold`` — the batch entry's own DataFrame transform —
-    applied unchanged to ``read_stream(table)`` and drained by
-    ``run_to_memory`` in output ``mode``. ``finish`` runs batch-side on
-    the drained table, for the steps a streaming query cannot hold
-    after its aggregation (rank windows, stack unpivots, row math).
-    The batch entry's DuckDB oracle then checks the stream."""
+    """A registry entry that runs ``fold`` — a DataFrame transform, for
+    a twin the batch entry's own — unchanged over ``read_stream(table)``
+    and drains it with ``run_to_memory`` in output ``mode``. ``finish``
+    runs batch-side on the drained table, for the steps a streaming
+    query cannot hold after its aggregation (rank windows, stack
+    unpivots, row math). The entry's DuckDB oracle, shared with the
+    batch entry for a twin, checks the stream."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         tune(spark)

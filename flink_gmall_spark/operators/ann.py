@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 TOPK = 10
@@ -72,7 +71,6 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query side is tiny (N_QUERIES rows) and broadcast; the corpus scan
     streams once. Ranking is windowed row_number with a vec_id tiebreak.
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -181,7 +179,6 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     job; the serving plan is what this operator exercises). Recall is
     partial by construction; the oracle applies identical probing.
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
@@ -276,7 +273,6 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     because both engines fold the identical double sequence (module
     doc).
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -395,7 +391,6 @@ def hard_negatives_ivf(
     fake 0. The default (None) keeps the full-set behavior — the
     registry/oracle hash contract is unchanged.
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -548,7 +543,6 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction — the documented LSH recall trade; the oracle applies
     the identical bucketing so the contract is exact.
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     bucket = F.concat_ws(
         "",
@@ -625,7 +619,6 @@ def block_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     qrows = (
         emb.filter(F.col("vec_id") < N_BLOCK_QUERIES)
@@ -707,7 +700,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (label, dim): at 100 TB this is a bounded-key aggregation
     (labels x 64 dims), never a wide row.
     """
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     comp = emb.select(
         "label",
@@ -771,7 +763,6 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut DAG growth; at 2 unrolled rounds the declarative DAG lets
     exchange reuse dedupe instead.
     """
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
@@ -878,7 +869,6 @@ def ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     one corpus scan per training round + one for serving, candidates
     bounded by cell size x NPROBE.
     """
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     _, cent = _lloyd_rounds(emb.select("vec_id", "v"))
     aff = emb.join(F.broadcast(cent), how="cross").withColumn(
@@ -983,7 +973,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus grows, keeping per-key join fan-out flat. Dot products are
     strictly-sequential JVM folds, bit-identical to the DuckDB oracle.
     """
-    tune(spark)
     e = _with_norm(load(spark, sf_dir, "embeddings"))
     cent = e.filter(F.col("vec_id") < SEMDEDUP_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -1069,7 +1058,6 @@ def semantic_dedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential-fold dot products — is semantic_dedup's audited shape;
     the oracle unrolls the identical training rounds before the same
     pair logic."""
-    tune(spark)
     e = _with_norm(load(spark, sf_dir, "embeddings"))
     _, cent = _lloyd_rounds(e.select("vec_id", "v"))
     d = e.join(F.broadcast(cent), how="cross").withColumn(
@@ -1219,7 +1207,6 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ codes for the whole corpus: per (vector, subspace), the nearest
     sub-codeword (argmin squared L2, lowest-cid tiebreak) and its
     quantization error. The artifact an ADC index stores."""
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
@@ -1267,7 +1254,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent), so ranking ties cannot float and the DuckDB
     oracle hash-matches; ranking is (adist ASC, vec_id ASC).
     """
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
@@ -1385,7 +1371,6 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization); the oracle applies identical probing so the contract
     is exact.
     """
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
@@ -1474,7 +1459,6 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     than running the indexes it audits; on a cluster the exact side runs
     on a sampled query set, same plan.
     """
-    tune(spark)
     exact = ann_topk(spark, sf_dir).select("query_id", "neighbor_id")
     ivf = ivf_topk(spark, sf_dir).select(
         "query_id", "neighbor_id", F.lit(1).alias("ivf_hit")
@@ -1530,7 +1514,6 @@ def mrl_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-materialized array, not a scan. Ranking + set intersection
     are the audited topk/recall idioms shared with ann_topk /
     ann_recall_report."""
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> cast(x AS double))").alias("v"),
@@ -1648,7 +1631,6 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cell_ranked pass, so the report audits the very cells the serving
     path probes. One corpus pass + one bounded (<= N_CELLS rows)
     aggregation — report cost is assignment cost."""
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     cells = _cell_ranked(emb).filter(F.col("crank") == 1).select("vec_id", "cid")
     sz = cells.groupBy("cid").agg(F.count(F.lit(1)).alias("sz"))
@@ -1686,7 +1668,6 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC discipline), then cast to double ONCE before the rounded
     division, so the report hash-pins despite being float-valued.
     Cost: the encode pass it audits plus a PQ_M-row aggregation."""
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
@@ -1735,7 +1716,6 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each sweep point filters crank <= p before its own ranking —
     no per-point corpus pass. Hash-pinned integers (hits, candidates)
     + the recall division, so index drift fails correctness."""
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     ranked = _cell_ranked(emb)
     cells = ranked.filter(F.col("crank") == 1).select("vec_id", "cid")
@@ -1885,7 +1865,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_eligible column ledgers the per-query selectivity so an operator
     can see when a filter is tight enough to warrant a per-label
     partition layout instead."""
-    tune(spark)
     emb = _with_norm_label(load(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -1955,7 +1934,6 @@ def ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth is partial exactly as in unfiltered IVF: a filtered neighbor
     outside the probed cells is missed — per-cell label skew makes this
     WORSE than unfiltered recall, which is why the two entries pair."""
-    tune(spark)
     embl = _with_norm_label(load(spark, sf_dir, "embeddings"))
     emb = embl.select("vec_id", "v", "nrm")
     qv = embl.filter(F.col("vec_id") < N_QUERIES).select(
@@ -2025,7 +2003,6 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterparts. Result size is data-dependent by design; rank rides
     along (cos DESC, vec_id ASC) so callers can cut consistent
     prefixes."""
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -2089,7 +2066,6 @@ def ivf_range_search(
     range_search's broadcast query side, so the brute-force audit join
     really shrinks — and unsampled queries carry the -1 "not audited"
     sentinel in n_exact. Default None keeps the full-audit contract."""
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),

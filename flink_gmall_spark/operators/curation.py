@@ -36,7 +36,6 @@ from flink_gmall_spark.operators.dedup import (
     ORACLE_SIMHASH,
     simhash_fingerprints,
 )
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 # token arrays in DuckDB — identical tokenization to tokens_col
@@ -72,7 +71,6 @@ def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-length histogram per language over power-of-two buckets —
     the curriculum/packing planner's input (how much corpus sits in each
     sequence-length class). One partial-aggregated shuffle."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sized = docs.select(
         "lang", F.size(tokens_col("text")).cast("long").alias("n_tok")
@@ -112,7 +110,6 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     window per language shard (see module docstring for the 100 TB
     sharding note).
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id", "lang", F.size(tokens_col("text")).cast("long").alias("n_tok")
@@ -169,7 +166,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     via an md5-prefix threshold on the seeded doc_id — reproducible across
     engines, runs, and cluster layouts (no RNG state), and purely a narrow
     filter: zero shuffles at any scale."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     keyed = docs.withColumn(
         "hx",
@@ -219,7 +215,6 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver merge) — no global sort, no shuffle of the corpus. Works
     unchanged at 100 TB.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     pri = F.expr(
         f"cast(conv(substring(md5(concat('{WEIGHTED_SEED}',"
@@ -263,7 +258,6 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.operators.dedup import _shingles
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
     hold = sh.filter(F.col("doc_id") % HOLDOUT_MOD == 0).select(
@@ -319,7 +313,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for df, a shuffle join back, one window for top-N — each keyed
     on term or doc, never all-pairs.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     tf = (
         docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
@@ -374,7 +367,6 @@ def keep_best_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     One windowed shuffle over the fingerprint table; at 100 TB the
     fingerprint groupBy is the same shuffle the dedup itself needs.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     fp = simhash_fingerprints(spark, sf_dir)
     g = fp.join(docs, "doc_id")
@@ -425,7 +417,6 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture summary (docs/tokens kept + the applied threshold) — the
     mixture report a data-recipe pipeline logs.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id", "source", F.size(tokens_col("text")).cast("long").alias("n_tok")
@@ -498,7 +489,6 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from). One explode + one partial→final count; the global top-N plans
     as TakeOrderedAndProject (per-partition heaps), never a full sort.
     Total order: count desc, then the bigram string — ties cannot float."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(tokens_col("text").alias("t")).filter(F.size("t") >= 2)
     g = toks.select(
@@ -549,7 +539,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     span."""
     from flink_gmall_spark.operators.dedup import minhash_lsh_pairs
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     losers = (
         minhash_lsh_pairs(spark, sf_dir)
@@ -654,7 +643,6 @@ def domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap runnable at corpus scale where a naive window would funnel the
     whole hot domain through one reducer's sort.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
@@ -695,7 +683,6 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps, no global sort). Total
     order: count desc, then pair text — ties cannot float.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(tokens_col("text")).alias("w"))
@@ -756,7 +743,6 @@ def lm_commonness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is BIGINT end to end (sum * SCALE DIV n), so the DuckDB
     oracle hash-matches exactly — no float log-probs to diverge.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "lang", tokens_col("text").alias("t")).filter(
         F.size("t") >= 2
@@ -917,7 +903,6 @@ def lm_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Add-one-smoothed bigram log-probability per document — the CCNet
     perplexity-filter shape with actual log-probabilities (corpus LM
     table ⋈ document n-grams → per-doc reduce), hash-exact end to end."""
-    tune(spark)
     # NO spread_small_scan — measured at sf0.1 (r16, interleaved):
     # 1.93 s spread vs 1.59 s unspread; the bigram fold is too cheap to
     # amortize an injected repartition of the docs scan.
@@ -1030,7 +1015,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     words ≥2 chars — classic BPE pre-clean, and it keeps the interpolated
     merge symbols quoting-safe.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     cur = _bpe_dictionary(docs).select(
         "freq", F.array_join(F.split("w", ""), " ").alias("s")
@@ -1169,7 +1153,6 @@ def adaptive_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     two agree."""
     from flink_gmall_spark.operators.textstats import STOPWORDS
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
     scored = docs.select(
@@ -1269,7 +1252,6 @@ def collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-N plans as TakeOrderedAndProject. Support floor COLLOC_MIN_CT
     prunes the long tail before the joins.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(tokens_col("text").alias("t"))
     uni = (
@@ -1356,7 +1338,6 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ~50 rounds) — at 5 unrolled rounds the declarative chain is the
     clearer plan.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sym = _bpe_symbolized_dictionary(spark, sf_dir, docs).select(
         "w", "freq", F.explode(F.split("s", " ")).alias("symbol")
@@ -1438,7 +1419,6 @@ def multimodal_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST shrinks the pair join's input, which is the right composition
     order (cheap filters before quadratic-ish candidates).
     """
-    tune(spark)
     from flink_gmall_spark.operators.ann import (
         SEMDEDUP_K,
         SEMDEDUP_THRESHOLD,
@@ -1573,7 +1553,6 @@ def bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary domain (non-/^[a-z]+$/, len<2) count 1 symbol each — the
     byte/char fallback tier every production tokenizer has.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(tokens_col("text")).alias("w"))
     dict_syms = _bpe_symbolized_dictionary(spark, sf_dir, docs).select(
@@ -1663,7 +1642,6 @@ def bpe_greedy_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     across its two consumers (the vocab collect and the drift agg) and
     dropped after the eager one-row materialization.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sym_full = _bpe_symbolized_dictionary(spark, sf_dir, docs).persist()
     vset = {
@@ -1796,7 +1774,6 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary is one partial-agg pass. Works identically on 100 TB because
     nothing depends on row order, partition count, or cluster layout.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     hx = F.expr(
         f"substring(md5(concat('{SPLIT_SEED}', CAST(doc_id AS STRING))), 1, 6)"
@@ -1858,7 +1835,6 @@ def boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source doc totals are a tiny broadcast side. Integer threshold
     (100·df ≥ PCT·n) keeps the flag exact in both engines.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", "source", tokens_col("text").alias("t")).filter(
         F.size("t") > 0
@@ -1958,7 +1934,6 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.operators.dedup import _shingles
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
     hold = sh.filter(F.col("doc_id") % HOLDOUT_MOD == 0)
@@ -2086,7 +2061,6 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-N whose rank filter pushes into the shuffle as WindowGroupLimit.
     No global sort, no driver loop.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return temperature_draw(docs.select("doc_id", "lang"))
 
@@ -2165,7 +2139,6 @@ def filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, bounds the state). Survival percentage is integer HALF_UP so
     both engines hash-match bit-for-bit.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return funnel_ledger(funnel_wide_agg(docs))
 
@@ -2272,7 +2245,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.operators.dedup import _shingles
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     src_sh = (
         _shingles(docs)
@@ -2347,7 +2319,6 @@ def recipe_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     from flink_gmall_spark.functions.tokenize import tokens_col
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     langs = ", ".join(f"'{l}'" for l in FUNNEL_LANGS)
     pool = docs.filter(
@@ -2428,7 +2399,6 @@ def span_corruption_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, sequential fold for masked token count — zero shuffle,
     zero UDF: at 100 TB this is a map-only pass whose cost is the token
     split it already shares with the quality operators."""
-    tune(spark)
     return span_spec_transform(load(spark, sf_dir, "documents"))
 
 
@@ -2517,7 +2487,6 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole ledger hash-pins. A fertility drift after retraining the
     merge table is a correctness failure here, not a surprise in the
     training-run token accounting."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     budget = bpe_token_budget(spark, sf_dir)
     j = budget.join(docs.select("doc_id", "lang"), "doc_id")
@@ -2560,7 +2529,6 @@ def dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         STOPWORDS,
     )
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
     base = docs.select(
@@ -2664,7 +2632,6 @@ def global_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     range) — the balance table an operator checks before submitting the
     actual rewrite; the hash math is the same expression the write path
     uses. Narrow map + one 16-group aggregation, no joins."""
-    tune(spark)
     return shuffle_shard_agg(load(spark, sf_dir, "documents"))
 
 
@@ -2742,7 +2709,6 @@ def padding_waste_agg(docs: DataFrame) -> DataFrame:
 
 def padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry over padding_waste_agg — see its docstring."""
-    tune(spark)
     return padding_waste_agg(load(spark, sf_dir, "documents"))
 
 
@@ -2863,7 +2829,6 @@ def seq_len_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation is complete-mode streamable; the streaming twin shares
     every stage verbatim. Overflow headroom: 1000·tokens stays under
     2^63 up to ~9e15 tokens — two orders past a 100 TB text corpus."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return seq_len_finish(seq_len_fold(docs))
 
@@ -2930,7 +2895,6 @@ def chunk_overlap_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     same output volume any chunker must produce. Slicing the actual
     token arrays is the trivial follow-on map (slice(t, tok_start+1,
     tok_len)); the spec is the testable contract."""
-    tune(spark)
     return chunk_spec_transform(load(spark, sf_dir, "documents"))
 
 
@@ -3001,7 +2965,6 @@ def repeat_epochs_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partial-agg pass to |sources| rows, then pure
     row math — the physical repeat is a later map (explode(sequence(1,
     epochs))) that never needs to materialize here."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return repeat_epochs_finish(repeat_epochs_fold(docs))
 
@@ -3135,7 +3098,6 @@ def pretrain_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic (hash-keyed, integer arithmetic), so a re-run or a
     backfill produces the byte-identical build — the property that lets
     the shard manifests be content-addressed."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     gated = pretrain_gate(docs)
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
@@ -3267,7 +3229,6 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window keys would widen to a composite score; documented, not
     hit at fixture scales (the skew bound is property-tested —
     tests/test_properties.py — and recorded in SCALE.md)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return curriculum_finish(curriculum_scored(docs))
 
@@ -3387,7 +3348,6 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, pair_id). The oracle is the textbook row_number form —
     the hash match proves the distributed form equals it (skew bound
     property-tested, tests/test_properties.py; recorded in SCALE.md)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return preference_finish(preference_scored(docs))
 
@@ -3591,7 +3551,6 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry over dsir_weight_table — the 256-row weight table a
     deployment broadcasts to its ingest filters; pinned as its own hash
     contract so estimator regressions are localizable."""
-    tune(spark)
     return dsir_weight_table(load(spark, sf_dir, "documents"))
 
 
@@ -3690,7 +3649,6 @@ def importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     other exchange is the bounded per-source ledger fold). Every number
     is BIGINT-exact, so re-runs and backfills select the byte-identical
     subset."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return _dsir_ledger(_dsir_scored(docs, _dsir_warr(docs)))
 
@@ -4003,7 +3961,6 @@ def unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNIGRAM_EM_ITERS Viterbi-EM rounds — the artifact a SentencePiece-
     style tokenizer ships (piece + log-probability), next to BPE's
     merge table (bpe_train_merges)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     _, vocab = _unigram_vocab(docs)
     return vocab.select(
@@ -4016,7 +3973,6 @@ def unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (one more Viterbi pass, exactly the deployment encoder)
     and report per-piece corpus usage: (piece, ct, n_words). Train→serve
     twin of unigram_train, mirroring bpe_encode_corpus."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     cand, vocab = _unigram_vocab(docs)
     return _unigram_usage(_unigram_segment(cand, vocab))
@@ -4046,7 +4002,6 @@ def unigram_fertility_vs_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast while the vocab fits); OOV words (outside the trainer's
     /^[a-z]+$/ len>=2 domain) count 1 token under both — the shared
     byte-fallback tier."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     cand, vocab = _unigram_vocab(docs)
     uni = _unigram_segment(cand, vocab).select(
@@ -4259,7 +4214,6 @@ def unigram_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_token_budget: the segmented dictionary is vocabulary-sized, the
     corpus joins it on the word (broadcast while it fits, AQE decides)
     and partial-aggregates per doc — no per-document re-tokenization."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     cand, vocab = _unigram_vocab(docs)
     uni = _unigram_segment(cand, vocab).select(
@@ -4329,7 +4283,6 @@ def unigram_vocab_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the sweep re-runs only the vocabulary-sized segment
     pass per K — the corpus is touched once (the dictionary build);
     each operating point is a broadcast-sized join + per-row DP."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     cand, vocab = _unigram_vocab(docs)
     dictionary = _bpe_dictionary(docs)
@@ -4468,7 +4421,6 @@ def blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing a stop-phrase in a common document is the failure mode)."""
     from flink_gmall_spark.operators.dedup import apply_span_cuts, merged_spans
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     terms = [
         (pid, ti, tok, len(p.split()))

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.functions.tokenize import TOKEN_SPLIT_RE, tokens_col
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load, spread_small_scan
 
 SHINGLE_K = 3
@@ -43,7 +42,6 @@ CHUNK_HEX = 4  # each min-hash = a 16-bit (4-hex) chunk of md5(s)||md5('x'||s)
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group documents by content hash, keep the smallest id."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return docs.groupBy(F.md5("text").alias("text_hash")).agg(
         F.min("doc_id").alias("keep_id"),
@@ -237,7 +235,6 @@ def _pair_jaccard(
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by exact n-gram-shingle Jaccard (all-pairs over
     the shared-shingle join — the correctness baseline for minhash_lsh)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return _pair_jaccard(_shingles(docs))
 
@@ -301,7 +298,6 @@ def minhash_lsh_pairs(
     call only for cold single-shot runs or when the shingle set feeds
     MANY separate actions (e.g. iterative connected components over a
     fresh corpus)."""
-    tune(spark)
     # NO spread_small_scan here — measured at sf0.1 (r16, two
     # interleaved pairs): 2.77 vs 2.39 s / 2.48 vs 2.40 s — this plan
     # stays declarative (no checkpoint), and the spread exchange feeds
@@ -386,7 +382,6 @@ def apply_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented). Output is the kept doc ids + their fingerprint-relevant
     stats, ready to feed the text-analysis operators.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(spark, sf_dir)
     losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
@@ -433,7 +428,6 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     label themselves. At 100 TB each round is one shuffle join; diameters
     of near-dup clusters are tiny in practice (pairs are ~cliques).
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # symmetric edge list; isolated docs simply keep their own label
@@ -542,7 +536,6 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears. Equivalence is pinned by tests/test_analytics_ops.py
     (hand-computed bits) and the DuckDB oracle (unchanged).
     """
-    tune(spark)
     # NO spread_small_scan here — measured at sf0.1 (r16, two
     # interleaved pairs): 1.63/1.83 s spread vs 1.39/1.53 s unspread;
     # the per-token md5 fold is too cheap to amortize the extra
@@ -592,7 +585,6 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the primary near-dup contract here; this operator exists for the
     long-document regime and is oracle-exact either way.
     """
-    tune(spark)
     fp = simhash_fingerprints(spark, sf_dir)
     bands = fp.select(
         "doc_id",
@@ -699,7 +691,6 @@ def bag_of_words_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into one group — the dup class exact hashing misses and shingle
     methods only partially catch (word order destroys most shingles).
     Same single-hash-aggregation scale shape as exact_dedup."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     fp = F.md5(F.array_join(F.array_sort(tokens_col("text")), " "))
     return docs.groupBy(fp.alias("bow_fp")).agg(
@@ -740,7 +731,6 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, and the final groupBy(doc_id) is the natural output partitioning
     for a downstream rewrite of the kept text.
     """
-    tune(spark)
     W = CHUNK_DEDUP_W
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
@@ -815,7 +805,6 @@ def cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-LSH + bounded-iteration propagation; the rollup itself is one
     partial-agg shuffle keyed on cluster_id (cluster sizes are bounded by
     near-dup cliques, no hot key)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     labels = connected_components(spark, sf_dir)
     j = labels.join(docs.select("doc_id", "n_chars"), "doc_id")
@@ -860,7 +849,6 @@ def intra_doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps FIRST occurrences in array order — the oracle pins that contract
     with a (doc_id, chunk) first-idx window.)
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return intra_doc_transform(docs)
 
@@ -937,7 +925,6 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest decision per new doc: match count, the canonical duplicate
     target (min corpus doc_id), and the strongest verified similarity.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
     sig_wide, sig = _band_sigs(sh)
@@ -1026,7 +1013,6 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     affordable at audit scale (or on a sampled corpus partition at
     100 TB); the LSH side is the production path being audited.
     """
-    tune(spark)
     return _recall_ledger(
         ngram_jaccard_pairs(spark, sf_dir), minhash_lsh_pairs(spark, sf_dir)
     )
@@ -1099,7 +1085,6 @@ def containment_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification runs only over candidate docs via the shared
     _pair-style semi-join reduction. No all-pairs, no per-query scan —
     two shuffles on shingle / doc keys end to end."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
     w = Window.partitionBy("doc_id").orderBy("pk", "s")
@@ -1197,7 +1182,6 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline actually applies the passes. Scale shape: three anti-joins
     over doc ids + the audited pair generators — no new corpus passes
     beyond the stages being measured."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     keep = exact_dedup(spark, sf_dir).select(F.col("keep_id").alias("doc_id"))
     s1 = docs.join(keep, "doc_id", "left_semi")
@@ -1285,7 +1269,6 @@ def dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (the cap exists to bound pair joins; a coverage count is a
     per-key aggregate and needs no cap); the x1000 integer ratio
     hash-pins. Two shuffles (df on shingle, rollup on doc)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = raw_shingles(docs)
     with_df = sh.withColumn(
@@ -1366,7 +1349,6 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the recall estimate needs thousands of docs, not 100 TB) — the
     full-corpus serving path stays minhash_lsh_pairs, which deliberately
     does NOT materialize (its docstring records that measurement)."""
-    tune(spark)
     # spread the single-row-group scan so the checkpointed shingle build
     # parallelizes (guide §2.5; identity when splits >= cores)
     docs = spread_small_scan(load(spark, sf_dir, "documents"))
@@ -1540,7 +1522,6 @@ def jaccard_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization knob, correctness never depends on it. The DF cap
     (_shingles) stays, keeping this entry's universe identical to the
     Jaccard family's."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
     w = Window.partitionBy("doc_id").orderBy("pk", "s")
@@ -1588,7 +1569,6 @@ def apply_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy single-pass form production pipelines use. A doc contained
     in a LARGER doc always drops; the larger container survives unless
     itself contained elsewhere."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     pairs = containment_prefix_pairs(spark, sf_dir)
     losers = pairs.select(F.col("contained_doc").alias("doc_id")).distinct()
@@ -1688,7 +1668,6 @@ def _winnow_fp_expr(w: int) -> str:
 def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry over winnow_fingerprint_rows — the corpus fingerprint
     index (doc_id, fp) a plagiarism/overlap service serves from."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return winnow_fingerprint_rows(docs)
 
@@ -1734,7 +1713,6 @@ def winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, floored at WINNOW_MIN_SHARED. The bucketing contract is
     exact — the oracle applies the identical winnow + cap — so the
     entry is hash-checked, not best-effort."""
-    tune(spark)
     # NO spread_small_scan — measured at sf0.1 (r16, interleaved):
     # 1.98 s spread vs 1.65 s unspread; one winnow width over one scan
     # is too light to amortize an injected repartition.
@@ -1789,7 +1767,6 @@ def winnowing_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap empirically so the W knob is tuned on numbers, not vibes. The
     truth side is audit-scale (or a sampled partition at 100 TB); the
     fingerprint side is the production path being audited."""
-    tune(spark)
     return _recall_ledger(
         ngram_jaccard_pairs(spark, sf_dir), winnowing_pairs(spark, sf_dir)
     )
@@ -1829,7 +1806,6 @@ def winnowing_w_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The output joins from a literal W dimension so a W with zero
     candidates (or an empty corpus) still reports its row, mirroring
     the oracle's unconditional per-W selects."""
-    tune(spark)
     # spread the single-row-group scan: the fused 4-width k-gram-md5
     # Generate above it was the sf1 ladder's serial wall (~20 s in one
     # task; guide §2.5; identity when splits >= cores)
@@ -2119,7 +2095,6 @@ def substring_runs(docs: DataFrame) -> DataFrame:
 def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry: every maximal >= MIN_RUN_TOKENS shared run in the
     corpus, as (doc_a, doc_b, a_start, b_start, run_tokens)."""
-    tune(spark)
     return substring_runs(load(spark, sf_dir, "documents"))
 
 
@@ -2245,7 +2220,6 @@ def substring_ledger(docs: DataFrame) -> DataFrame:
 
 def exact_substring_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry over substring_ledger."""
-    tune(spark)
     return substring_ledger(load(spark, sf_dir, "documents"))
 
 
@@ -2316,7 +2290,6 @@ def substring_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     column near zero is the internal-consistency check; the reverse
     direction is the expected recall gap — scattered 3-gram duplication
     with no long contiguous run)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     ng = dup_ngram_coverage(spark, sf_dir).select(
         "doc_id", "dup_coverage_x1000"
@@ -2415,7 +2388,6 @@ def strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring_runs, so verbatim repetition WITHIN one document is out of
     scope by design (text_repetition covers the intra-doc signal); the
     oracle mirrors the same scope."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     runs = substring_runs(docs)
     spans = runs.select(
@@ -2586,7 +2558,6 @@ def intra_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_intra_spans.py, which runs BOTH engines over a
     pathological fixture (period-2 repeat, disjoint block repeat,
     cross-doc control) and pins hand-computed expectations."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     per_doc = (
         merged_spans(_b_side_spans(intra_substring_runs(docs)))
@@ -2625,7 +2596,6 @@ def strip_all_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same output shape as strip_dup_spans (n/kept/removed tokens +
     kept-text md5), so the two entries diff directly: any doc whose
     kept_md5 differs is a doc with intra-document repetition."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     g = positional_run_grams(docs)
     runs = runs_finish(substring_gram_matches(g, g, scope="both"))

@@ -19,7 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 DECODE_SCHEMA = (
@@ -61,7 +60,6 @@ def binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas feature extraction. The oracle recomputes the same
     features from the source text, proving the bytes survived the
     round-trip through Arrow unharmed."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     binarized = docs.select(
         "doc_id",
@@ -108,7 +106,6 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reconstructs frame geometry arithmetically from the text
     (char==byte positions; valid because the corpus is pure ASCII —
     verified at every SF — the engine side chunks true bytes either way)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     binarized = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return binarized.mapInPandas(_sample_frames, FRAME_SCHEMA)
@@ -172,7 +169,6 @@ def resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal resize/decimation: binary payload → bounded-size sample
     via mapInPandas. The oracle recomputes the stride arithmetic over the
     (ASCII, see frame_sample) source text."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     binarized = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return binarized.mapInPandas(_resize, RESIZE_SCHEMA)
@@ -236,7 +232,6 @@ def embed_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stage that turns opaque payloads into vectors the similarity
     operators (operators.ann) consume. Output size is docs × 16
     regardless of payload size: bounded, like a real embedding."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     binarized = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return binarized.mapInPandas(_embed_stub, EMBED_SCHEMA)

@@ -64,7 +64,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.functions.tokenize import TOKEN_SPLIT_RE, tokens_col
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 N_RETR_QUERIES = 8  # doc_id < 8 are the query documents
@@ -211,7 +210,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tf, df, dl — Catalyst reuses the tf exchange for both consumers),
     a 1-row stats broadcast, one BROADCAST match join on tok, one
     bounded-key aggregation, one per-query window."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return bm25_finish(bm25_match(query_occurrences(docs), scored_postings(docs)))
 
@@ -303,7 +301,6 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.operators.ann import ann_topk
 
-    tune(spark)
     lex = bm25_topk(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -451,7 +448,6 @@ def rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts reach the output."""
     from flink_gmall_spark.operators.ann import ann_topk
 
-    tune(spark)
     lex = bm25_topk(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -605,7 +601,6 @@ def bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap_default_ct); the default config's row pins
     overlap == ranked_ct as a self-check.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return param_sweep_finish(
         bm25_match(query_occurrences(docs), posting_features(docs))
@@ -725,7 +720,6 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only corpus-scale work is the tf/df aggregation already shared
     with the BM25 index build.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return prf_finish(
         bm25_topk(spark, sf_dir),
@@ -926,7 +920,6 @@ def bm25_topk_logidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rare-term over-boost in the unlogged ratio);
     tests/test_retrieval.py::test_logidf_vs_unlogged_rank_divergence
     constructs the divergence — that divergence is the point."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return bm25_finish(
         bm25_match(query_occurrences(docs), logidf_scored_postings(docs))
@@ -1072,7 +1065,6 @@ def retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     list and its RRF fusion, judged by the exact cosine top-k."""
     from flink_gmall_spark.operators.ann import ann_topk
 
-    tune(spark)
     lex = bm25_topk(spark, sf_dir).select("query_id", "doc_id", "rank")
     sem = ann_topk(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
@@ -1172,7 +1164,6 @@ def retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join and window (pushdown-visible), then ranked per query;
     positives and the final pos × neg pairing are query-bounded.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return triplets_finish(bm25_topk(spark, sf_dir), docs)
 
@@ -1370,7 +1361,6 @@ def rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_fixture_vec_id_doc_id_alignment)."""
     from flink_gmall_spark.operators.ann import ann_topk
 
-    tune(spark)
     lex = bm25_topk(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -1503,7 +1493,6 @@ def bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator."""
     from flink_gmall_spark.operators.ann import _with_norm, hard_negatives
 
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     exact = hard_negatives(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("doc_id")
@@ -1684,7 +1673,6 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     w2-filtered slice on (doc_id, pos), one bounded agg, one per-query
     window. The oracle is the bigram-shingle plan — same answers, the
     equivalence IS the test."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return phrase_finish(
         phrase_adjacent_matches(query_bigram_occurrences(docs), pos_index(docs))
@@ -1861,7 +1849,6 @@ def proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts the query pairs, leg 2 band-joins w2 postings on
     (doc_id, w2) with the window inequality as residual, one bounded
     agg, one per-query window."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return proximity_finish(
         proximity_matches(query_bigram_occurrences(docs), pos_index(docs))
@@ -1925,7 +1912,6 @@ def proximity_unordered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes 1 <= |p2 - p1| <= PROX_WINDOW and the closeness weight uses
     the magnitude — so a document phrasing the query terms in either
     order still scores."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return proximity_finish(
         proximity_matches(
@@ -2011,7 +1997,6 @@ def sdm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — lossless, because a window match requires both terms in the
     capped index, which implies a BM25 term match (pinned by
     test_sdm_prox_pairs_subset_of_bm25)."""
-    tune(spark)
     # NO spread_small_scan on the docs scan — measured at sf0.1 (r16,
     # interleaved): 4.07 s spread vs 2.88 s unspread (proximity_topk
     # 2.52 vs 2.17, lm_logprob 1.93 vs 1.59 — same pattern): the

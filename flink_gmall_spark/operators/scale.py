@@ -67,10 +67,8 @@ def salted_status_rollup(spark, sf_dir: str) -> DataFrame:
     aggregations). Phase 1 fans each status over SALT_BUCKETS reducers on
     a content-derived salt; phase 2 combines partials. The oracle is the
     straight GROUP BY — salting must be invisible in the result."""
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     out = salted_sum_count(orders, "o_orderstatus", "o_totalprice", "o_orderkey")
     return out.select("o_orderstatus", "total", "ct")
@@ -139,9 +137,7 @@ def bucketed_orders_join(spark, sf_dir: str) -> DataFrame:
     The merge hint keeps AQE from 'helpfully' broadcasting the small test
     table, which would hide the co-location this operator demonstrates."""
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.session import tune
 
-    tune(spark)
     li = spark.table(_bucketed_table(spark, sf_dir, "lineitem", "l_orderkey"))
     o = spark.table(_bucketed_table(spark, sf_dir, "orders", "o_orderkey"))
     j = li.hint("merge").join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
@@ -199,10 +195,8 @@ def skewed_part_join(spark, sf_dir: str) -> DataFrame:
     input has. The oracle is the straight join+GROUP BY — splitting must
     be invisible in the result."""
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     li = (
         load(spark, sf_dir, "lineitem")
         .withColumn("jk", F.expr(_SKEW_KEY))
@@ -251,10 +245,8 @@ def binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the exploded bins sums matched purchases once each — a right
     event has exactly one bin, so no pair can double-count).
     """
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     err = (
         ev.filter(F.col("event_type") == "error")
@@ -340,9 +332,7 @@ def partition_pruned_read(spark, sf_dir: str) -> DataFrame:
     is the 1-row max-date lookup that produces the literal — the same
     bounded driver-side step any dashboard's 'latest day' query does.
     The oracle recomputes the same day straight from the raw table."""
-    from flink_gmall_spark.session import tune
 
-    tune(spark)
     path = _date_partitioned_events(spark, sf_dir)
     ev = spark.read.parquet(path)
     last_day = ev.agg(F.max("dt")).collect()[0][0]
@@ -394,9 +384,7 @@ def dynamic_partition_pruning(spark, sf_dir: str) -> DataFrame:
     queries touch 1/365th of a year-partitioned 100 TB fact (gate in
     tests/test_plans.py asserts the dynamicpruning expression + parity
     with the unpartitioned join). weekday >= 5 is Sat/Sun (ISO)."""
-    from flink_gmall_spark.session import tune
 
-    tune(spark)
     path = _date_partitioned_events(spark, sf_dir)
     ev = spark.read.parquet(path)
     dim = spark.read.parquet(_date_dim(spark, sf_dir)).filter(F.col("wd") >= 5)
@@ -442,10 +430,8 @@ def runtime_bloom_join(spark, sf_dir: str) -> DataFrame:
     the later action executes the bloom-filtered plan while the session's
     conf state stays untouched for other entries."""
     from flink_gmall_spark.functions.parity import MONEY
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     confs = {
         # probe side must look "big" relative to the threshold; at 100 TB
         # the 10 GB default fires unaided
@@ -524,10 +510,8 @@ def epoch_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.functions.parity import MONEY
     from flink_gmall_spark.scratch import scratch_dir
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     # The nonce makes each invocation's store/compacted paths unique within
     # one Spark application — repeated or concurrent calls in the same app
     # can no longer race on the overwrite or read mixed file sets.
@@ -595,10 +579,8 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivots driver-side via stack(). At 100 TB this is the same single
     pass Deequ runs; column count, not row count, bounds the state.
     """
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     aggs = []
     for c in QUALITY_COLS:
@@ -706,9 +688,7 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup DuckDB runs on the original table — a rewrite that drops,
     duplicates, or mangles one row fails correctness.
     """
-    from flink_gmall_spark.session import tune
 
-    tune(spark)
     clustered = spark.read.parquet(zorder_rewrite(spark, sf_dir))
     return zorder_rollup(clustered)
 
@@ -733,10 +713,8 @@ def zorder_rewrite(spark: SparkSession, sf_dir: str) -> str:
     store. Nonce-tagged per call — concurrent invocations never race on
     the overwrite (the epoch_compaction discipline)."""
     from flink_gmall_spark.scratch import scratch_dir
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     tag = hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
         f"|{next(_ZORDER_CALLS)}".encode()
@@ -806,10 +784,8 @@ def join_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tiny; the final fold is one row. Nothing scales with the join
     OUTPUT — that is the point of a pre-flight.
     """
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     lc = (
         load(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("k"))
@@ -882,10 +858,8 @@ def _bucketed_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_occurrences,
         scored_postings,
     )
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sp = spark.table(
         _bucketed_df_table(
@@ -998,10 +972,8 @@ def bucketed_phrase_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         pos_index,
         query_bigram_occurrences,
     )
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     idx = spark.table(
         _bucketed_df_table(
@@ -1054,10 +1026,8 @@ def bucketed_substring_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         runs_finish,
         substring_gram_matches,
     )
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     idx = spark.table(
         _bucketed_df_table(
@@ -1101,10 +1071,8 @@ def bucketed_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_occurrences,
         scored_postings,
     )
-    from flink_gmall_spark.session import tune
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     # unigram leg — same bucketed tables as _bucketed_bm25_topk (shared
     # labels: a session serving BM25 and SDM materializes each once)

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.functions.tokenize import TOKEN_SPLIT_RE, tokens_col
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 # n-gram/stopword marker lists for the language-ID heuristic. The corpus
@@ -44,7 +43,6 @@ def _duck_marker_count(lang: str) -> str:
 
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-token language ID with a fixed tie order (en > es > de)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
@@ -91,7 +89,6 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document-quality signals (length / stopword / alnum
     ratios) + a keep/drop gate — the C4/Gopher-style filter shape.
     Ratios stay integer-derived (x1000, integer division) for parity."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     stop_arr = ", ".join(f"'{s}'" for s in STOPWORDS)
     base = docs.select(
@@ -156,7 +153,6 @@ FROM base
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish regex pieces + byte len
     (the budget triad of an LLM-data pipeline)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -192,7 +188,6 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit redaction counts + the hash of the scrubbed text (the pipeline
     downstream consumes hashes/stats; full scrubbed text stays columnar).
     Pure JVM regexp — the standard pre-training scrub shape."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     lower = F.lower("text")
     scrubbed = F.regexp_replace(
@@ -232,7 +227,6 @@ FROM s
 def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints over whitespace-normalized text (md5 + a short
     prefix usable as a shard/bucket key)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     return docs.select(
@@ -261,7 +255,6 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct count all happen inside one projection per row, so the
     operator runs with ZERO shuffles at any corpus size (asserted in
     test_plans.py); a quality-filter pass over 100 TB is a pure scan."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
         F.size("t") >= 2
@@ -314,7 +307,6 @@ def rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized, broadcast back to the token stream) and pure
     integer sums — order-independence for free, unlike log-prob scores
     whose float sums would be partition-order-dependent."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
     corpus = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cf"))
@@ -373,7 +365,6 @@ def hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch still honors the bound (merging never degrades HLL accuracy
     beyond its configured rsd).
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     per = docs.groupBy("lang").agg(
         F.hll_sketch_agg(F.md5("text"), HLL_LG_K).alias("sk"),
@@ -446,7 +437,6 @@ def hashed_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles, zero Python. This is the entire serving cost of a
     trained text classifier done right: one streaming pass.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     w_arr = ", ".join(str(w) for w in CLS_WEIGHTS)
     idx = HASH_IDX_SPARK.format(tok="tok")
@@ -510,7 +500,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     total. The labeled corpus at 100 TB is the sampled golden set; the
     predictor is the production path being audited.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
     pred = lang_id(spark, sf_dir).select("doc_id", "pred_lang")
     cells = (
@@ -572,7 +561,6 @@ def sparse_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle with per-key fan-out ≤ MAX_DF², the pair scores
     partial-aggregate, and top-N is TakeOrderedAndProject.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens_col("text").alias("t")).filter(
         F.size("t") >= SPARSE_K
@@ -671,7 +659,6 @@ def frequent_terms_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, which (unlike the sketches) both engines replay bit-for-bit,
     so the oracle checks candidate selection AND the final counts.
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sampled = docs.filter(
         F.expr(
@@ -778,7 +765,6 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows afterwards — at 100 TB the sweep costs exactly one scan plus a
     map-side-combined aggregation to a single |SWEEP|-row result, vs
     |SWEEP| scans for the naive loop."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return sweep_stack(sweep_fold(docs))
 
@@ -823,7 +809,6 @@ def classifier_roc_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, then |GRID| x 4 conditional confusion aggregates stacked
     to rows — the quality_threshold_sweep discipline. tpr/fpr are x1000
     integers (hash-pinned); NULL when a class is empty."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return roc_finish(roc_fold(docs))
 
@@ -1046,7 +1031,6 @@ def token_diversity_transform(docs: DataFrame) -> DataFrame:
 
 def token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch entry over token_diversity_transform."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return token_diversity_transform(docs)
 
@@ -1173,7 +1157,6 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-slope ledger over the documents corpus: one keyed corpus
     aggregation (cf), a two-phase bounded top-N, and a single-row
     integer least-squares fit."""
-    tune(spark)
     return zipf_finish(corpus_cf(load(spark, sf_dir, "documents")))
 
 
@@ -1315,7 +1298,6 @@ def entropy_finish(terms: DataFrame) -> DataFrame:
 
 def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon entropy of the token distribution."""
-    tune(spark)
     return entropy_finish(entropy_terms(load(spark, sf_dir, "documents")))
 
 

@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 STREAK_SCHEMA = "user_id bigint, active_days bigint, longest_streak bigint"
@@ -45,7 +44,6 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive calendar days with at least one event. Days are deduped
     declaratively first (partial-aggregated distinct — the big shrink
     happens map-side), so the pandas stage sees one row per (user, day)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     days = ev.select(
         "user_id",

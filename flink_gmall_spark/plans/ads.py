@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_gmall_spark.functions.parity import MONEY, half_up_x100
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 TOP_BRANDS_LIMIT = 10
@@ -30,7 +29,6 @@ SCORE_WEIGHTS = {"purchase": 10, "signup": 3, "click": 2, "view": 1}
 def gmv_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 batch sum keyed by day (ProductStatsMapper.java:15-17:
     sum(order_amount) where toYYYYMMDD(stt)=date)."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
@@ -55,7 +53,6 @@ def top_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort+limit as TakeOrderedAndProject — no full sort at scale.
     Tiebreak on brand keeps the limit total-ordered.
     """
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     agg = (
@@ -86,7 +83,6 @@ LIMIT {TOP_BRANDS_LIMIT}
 def hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 conditional sum by hour (VisitorStatsMapper.java:19-22:
     sum(if(is_new='1', uv_ct, 0)) ... group by toHour(stt))."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(F.hour("ts").cast("long").alias("hr")).agg(
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
@@ -116,7 +112,6 @@ GROUP BY 1
 def status_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 group-by flag with sums (VisitorStatsMapper.java:13-16) + an
     average derived as exact-decimal-sum / count (no float re-rounding)."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     agg = orders.groupBy(F.col("o_orderstatus").alias("order_status")).agg(
         F.count(F.lit(1)).alias("order_ct"),
@@ -142,7 +137,6 @@ GROUP BY 1
 
 def user_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 weighted scoring agg + top-N (KeywordStatsMapper.java:13-18)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     expr = None
     for etype, wgt in SCORE_WEIGHTS.items():
@@ -176,7 +170,6 @@ LIMIT {USER_SCORES_LIMIT}
 
 def totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 batch counts (VisitorStatsMapper.java:24-30: count of non-null)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.agg(
         F.count(F.lit(1)).alias("ev_ct"),
@@ -198,7 +191,6 @@ FROM events
 def province_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 province rollup (ProvinceStatsMapper.java:13-16:
     sum(order_amount) group by province) through the full dim chain."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -238,7 +230,6 @@ def monthly_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot/wide-table surface (beyond the reference — Catalyst plans it
     as one pass of conditional aggregates, which is also exactly how the
     DuckDB oracle states it)."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     pivoted = (
         orders.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
@@ -274,7 +265,6 @@ KEYWORD_LIMIT = 20
 def keyword_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 literal shape (KeywordStatsMapper.java:13-18): keyword counts
     weighted per source via multiIf, summed, top-N with tiebreak."""
-    tune(spark)
     from flink_gmall_spark.plans.dws import keyword_stats
 
     kw = keyword_stats(spark, sf_dir)
@@ -325,7 +315,6 @@ def top_sku_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per group (windowed rank) — the per-group variant of the
     reference's global top-N mappers; planned as one shuffle on the group
     key + per-partition rank, no global sort."""
-    tune(spark)
     from pyspark.sql import Window
 
     li = load(spark, sf_dir, "lineitem")
@@ -374,7 +363,6 @@ def status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE rollup over (status, priority) — all grouping-set subtotals in
     one pass (Expand + hash agg). Beyond the reference surface; NULL
     grouping markers normalize to 'ALL' for a stable string contract."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     agg = orders.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("order_ct"),
@@ -415,7 +403,6 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     MISMATCH, not a silent pass. Raw-value tolerances are additionally
     exercised in tests/test_approx.py.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx_uv"),
@@ -457,7 +444,6 @@ def visitor_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ratio is computed with the integer HALF_UP trick (functions.parity)
     so Spark and DuckDB agree bit-for-bit — never round() on doubles.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("dt")).agg(
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
@@ -500,7 +486,6 @@ def gmv_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     date plus one window over the (tiny) daily series; decimal daily sums
     keep partition-order independence, and the moving mean divides by the
     actual frame size so the leading edge is exact."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("dt")
@@ -543,7 +528,6 @@ def amount_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group: the sketch variant stays the 100 TB default, this is the
     ground-truth/backfill path.
     """
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     amt = F.col("o_totalprice").cast(MONEY).cast("double")
     qs = ", ".join(str(p) for p in PCTLS)
@@ -588,7 +572,6 @@ def customer_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     completes the engine's set-operator family. Each branch plans as a
     left-semi/anti-style hash aggregate over the same two pruned scans —
     no full-table materialization."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     a = orders.filter(F.year("o_orderdate") == RETAIN_YEAR_A).select("o_custkey")
     b = orders.filter(F.year("o_orderdate") == RETAIN_YEAR_B).select("o_custkey")
@@ -625,7 +608,6 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CUBE entry (ads_status_priority_cube). One expand + one hash agg;
     both dims ride broadcast joins so the fact side never shuffles before
     the rollup. Subtotal rows label their collapsed level 'ALL'."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -666,7 +648,6 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     NO result materialization of the big side's payload — the idiomatic
     existence-complement at any scale (reference has no semi/anti ops;
     SURVEY §2.4 'Catalyst provides them for free')."""
-    tune(spark)
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     nation = load(spark, sf_dir, "nation")
@@ -694,7 +675,6 @@ def yoy_spend_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping customers present in either year (nulls coalesced to 0) with
     the year-over-year delta — the join type the retention set-op query
     cannot express (it loses the measures)."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
 
     def spend(year: int, alias: str) -> DataFrame:
@@ -743,7 +723,6 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     chaining). One shuffle on the user key; stages are conditional mins
     over the same pass. Output: one row per funnel stage with the user
     count that reached it."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
@@ -821,7 +800,6 @@ def amount_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic under a TOTAL order — the amount sort carries the
     order key as tiebreak, the discipline every ranking query here
     follows."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
         F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
@@ -873,7 +851,6 @@ def user_activity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets the IVF/LSH/PQ bucketing from operators.ann applies unchanged —
     featurize once, then every ANN serving shape is available.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     counts = ev.groupBy(
         F.col("user_id"), F.hour("ts").cast("int").alias("h")
@@ -955,7 +932,6 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot items. A support floor prunes the singleton tail before the
     count shuffle.
     """
-    tune(spark)
     # Basket semantics: collect_set dedups parts per order, so an order
     # holding the same part on two lines counts the pair once — the same
     # support definition association_rules uses (one basket, one vote).
@@ -1004,7 +980,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed equi, and the matrix is a bounded-key (cohort, offset)
     count. No windows over raw events, no per-user sorts.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.to_date("ts").alias("d")
@@ -1055,7 +1030,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     machines), then a bounded-key (from_type, to_type) partial-agg count
     — |types|² output rows regardless of corpus size.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = ev.select(
@@ -1106,7 +1080,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a narrow map; the segment semantics are unchanged. Final segment
     rollup is a bounded-key count.
     """
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("mx"))
     per = (
@@ -1192,7 +1165,6 @@ def negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     not redrawn (expected loss |positives|·K/|parts| — negligible), so
     the pipeline stays one-pass.
     """
-    tune(spark)
     pos_all = (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -1280,7 +1252,6 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — the same union-sort-carry discipline as the PIT feature
     join, never a per-purchase range join back into the event stream.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1369,7 +1340,6 @@ def session_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     them over a single (user_id)-keyed exchange; then the bounded-key
     (from, to) rollup. Same cost as the unscoped matrix.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     us = F.unix_micros("ts")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1442,7 +1412,6 @@ def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_transitions (two lags ride one sort), a bounded-key
     (|types|³ ceiling) partial-agg count, and TakeOrderedAndProject.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = ev.select(
@@ -1496,7 +1465,6 @@ def pit_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "combine and carry" as-of used by feature stores. Customers with no
     telemetry coalesce to zero-features rather than dropping rows.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("d")
@@ -1623,7 +1591,6 @@ def rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     rfm_segments each funnel the full table through one partition; this
     plan's only windows are over the bounded histograms.
     """
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     anchor = orders.agg(F.max("o_orderdate").alias("mx"))
     per = (
@@ -1778,7 +1745,6 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     copurchase), one partial-agg item-support table joined twice on the
     item key, a 1-row broadcast total. Support floor prunes before joins.
     """
-    tune(spark)
     # the basket table feeds three consumers (item support, order total,
     # pair generation) — materialize once. r15: baskets replace the
     # distinct (order, part) table + order-keyed self-join (see
@@ -1855,7 +1821,6 @@ def timed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual predicate (never a time-range cross join); the report is a
     1-row integer ledger with a HALF_UP-x100 rate — hash-exact.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -2063,7 +2028,6 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaratively (at production round counts, persist each vector like
     the k-means loop). Output is the top-N central parts.
     """
-    tune(spark)
     # shared checkpointed edge list; the ROUNDS stay declaratively
     # unrolled, which is this entry's identity (the persisted-per-round
     # production form is ads_part_pagerank_deep); each round is the
@@ -2157,7 +2121,6 @@ def part_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     right single-JVM/bench shape, where "executor loss" means the
     driver died anyway.
     """
-    tune(spark)
     # shared edge list, already eagerly checkpointed by the helper
     und = _copurchase_edges(spark, sf_dir)
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -2202,7 +2165,6 @@ def part_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes once (checkpoint, multi-consumer lesson); rounds unroll
     declaratively at this bounded hop count.
     """
-    tune(spark)
     und = _copurchase_edges(spark, sf_dir)
     seed = (
         und.groupBy("src")
@@ -2288,7 +2250,6 @@ def part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dst, dst) pair, explode to corners, count. Nothing sorts, nothing
     is quadratic in a hub's degree.
     """
-    tune(spark)
     # canonical (u < v) checkpointed edge set from the shared builder
     e = _copurchase_edges(spark, sf_dir, canonical=True)
     deg = (
@@ -2395,7 +2356,6 @@ def kanon_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     split + suppressed fold run on that bounded cell table, not on the
     customer rows. Money folds as DECIMAL cents (order-independent).
     """
-    tune(spark)
     cust = load(spark, sf_dir, "customer")
     return kanon_suppress(kanon_cells(cust))
 
@@ -2476,7 +2436,6 @@ def ldiversity_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, never on customer rows. Cites the same reference surface as
     kanon_export (privacy gating before ADS publication).
     """
-    tune(spark)
     cust = load(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"),
         F.col("c_mktsegment").alias("segment"),
@@ -2554,7 +2513,6 @@ def rolling_activity_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Money folds as DECIMAL cents (order-independent), rendered as an
     exact integer.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.unix_date(F.to_date("ts")).cast("long").alias("day_num")

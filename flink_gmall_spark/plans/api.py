@@ -7,7 +7,9 @@ HTTP shell (a non-goal, SURVEY §7.4). A user of the reference calls
 Each function is a thin parameterized wrapper over the registered plans
 (same aliases, same exact-decimal parity rules); adapter mapping per
 FIXTURES.md §7 (orders→order_info, part brand→trademark, nation→province,
-events→visitor log, documents→keyword source).
+events→visitor log, documents→keyword source). Each function is also
+an entry point: it tunes the session first (``session.tune``), because
+the plans it calls do not.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from flink_gmall_spark.sources import load
 def gmv(spark: SparkSession, sf_dir: str, date: str) -> DataFrame:
     """ProductStatsMapper.java:15-17: select sum(order_amount) ... where
     toYYYYMMDD(stt) = #{date}."""
+    tune(spark)
     return ads.gmv_by_date(spark, sf_dir).filter(F.col("dt") == date).select("gmv")
 
 
@@ -31,6 +34,7 @@ def product_stats_by_trademark(
 ) -> DataFrame:
     """ProductStatsMapper.java:35-40: group by trademark having
     order_amount > 0 order by order_amount desc limit N."""
+    tune(spark)
     return ads.top_brands(spark, sf_dir).limit(limit)
 
 
@@ -39,6 +43,7 @@ def product_stats_by_sku(
 ) -> DataFrame:
     """ProductStatsMapper.java:20-24 (spu variant): top products by
     order amount with a deterministic tiebreak."""
+    tune(spark)
     stats = dws.product_stats(spark, sf_dir)
     return stats.orderBy(F.desc("order_amount"), F.asc("sku_id")).limit(limit)
 
@@ -75,6 +80,7 @@ def visitor_stats_by_new_flag(spark: SparkSession, sf_dir: str, date: str) -> Da
 def keyword_stats(spark: SparkSession, sf_dir: str, limit: int = 10) -> DataFrame:
     """Unweighted keyword top-N by total count (the source-weighted
     variant of KeywordStatsMapper.java:13-18 is ads.keyword_weighted)."""
+    tune(spark)
     kw = dws.keyword_stats(spark, sf_dir)
     weighted = kw.groupBy("keyword").agg(
         F.sum(F.col("ct")).cast("long").alias("ct"),
@@ -84,6 +90,7 @@ def keyword_stats(spark: SparkSession, sf_dir: str, limit: int = 10) -> DataFram
 
 def province_stats(spark: SparkSession, sf_dir: str, date: str) -> DataFrame:
     """ProvinceStatsMapper.java:13-16: per-province order rollup for a day."""
+    tune(spark)
     stats = dws.province_stats(spark, sf_dir)
     return stats.filter(F.col("stt") == date).select(
         "province_name", "order_ct", "order_amount"

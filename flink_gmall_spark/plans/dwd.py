@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 # table_process analog (gmall bean/TableProcess.java:11-29, consumed by
@@ -32,7 +31,6 @@ def page_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     KeywordStatsApp.java:52-55 (predicate). The filter and the 4-column
     projection push down into the parquet scan.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.filter((F.col("event_type") == "view") & (F.length("props") > 0))
@@ -64,7 +62,6 @@ def clean_dirty_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's idiom is ``from_json`` yielding NULL + two filters over one
     parsed stream. Returned as branch counts so both branches are exercised.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     parsed = ev.withColumn("parsed", F.from_json("props", "k BIGINT"))
     branched = parsed.withColumn(
@@ -99,7 +96,6 @@ def config_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched event types drop (inner join), and the projected column count
     comes from the config row.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     cfg = spark.createDataFrame(ROUTING_CONFIG, ROUTING_SCHEMA)
     routed = ev.join(
@@ -210,7 +206,6 @@ def cdc_dim_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     every order emits an 'insert'; finished ('F') orders emit a later
     'update' marking payment — so the merge genuinely overrides rows.
     """
-    tune(spark)
     return dim_upsert_merge(_order_changelog(spark, sf_dir))
 
 
@@ -239,7 +234,6 @@ def cdc_dim_upsert_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.sources.pydatasource import GmallCDCDataSource
     from flink_gmall_spark.sources.tables import path as table_path
 
-    tune(spark)
     spark.dataSource.register(GmallCDCDataSource)
     env = (
         spark.read.format("gmall_cdc")
@@ -263,7 +257,6 @@ def cdc_dim_upsert_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     from flink_gmall_spark.scratch import scratch_dir
     from flink_gmall_spark.sources.pydatasource import GmallDimSinkDataSource
 
-    tune(spark)
     spark.dataSource.register(GmallDimSinkDataSource)
     out = dim_upsert_merge(_order_changelog(spark, sf_dir))
     # uuid tag: each run is a fresh 2PC epoch by design (the abort test
@@ -289,7 +282,6 @@ def cdc_dim_upsert_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.sources.tables import path as table_path
     from flink_gmall_spark.streaming.jobs import run_to_memory
 
-    tune(spark)
     spark.dataSource.register(GmallCDCStreamDataSource)
     env_stream = (
         spark.readStream.format("gmall_cdc_stream")
@@ -311,7 +303,6 @@ def cdc_dim_upsert_dist_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.sources.tables import path as table_path
     from flink_gmall_spark.streaming.jobs import run_to_memory
 
-    tune(spark)
     spark.dataSource.register(GmallCDCDistStreamDataSource)
     env_stream = (
         spark.readStream.format("gmall_cdc_stream_dist")
@@ -327,7 +318,6 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     op becomes a validity interval [op_time, next_op_time) per key, open
     intervals capped at 9999-12-31 — the MERGE-less history-table pattern
     (no Delta in this image; with it, this is the foreachBatch MERGE)."""
-    tune(spark)
     env = _order_changelog(spark, sf_dir)
     parsed = env.select(
         "op_us",
@@ -387,7 +377,6 @@ def cdc_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning needed when the key is selective. Training-data analog:
     joining feature values as-of each example's event time.
     """
-    tune(spark)
     hist = cdc_scd2_history(spark, sf_dir)
     hist_us = hist.select(
         "id",
@@ -470,7 +459,6 @@ def props_variant_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation is ordinary partial→final hash agg. Columnar shredding of
     hot paths (a storage-layer feature) slots in with no query change.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     v = ev.select("event_type", F.expr("try_parse_json(props)").alias("v"))
     k = v.select(
@@ -516,7 +504,6 @@ def cdc_delete_aware_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes the equivalent end-state relationally — a fold that loses a
     retraction or resurrects a deleted key hash-fails.
     """
-    tune(spark)
     log = _order_changelog_with_deletes(spark, sf_dir)
     parsed = log.select(
         "type", "op_us", "op_seq", F.from_json("data", CDC_DATA_SCHEMA).alias("d")

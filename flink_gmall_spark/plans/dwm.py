@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 # gmall UserJumpDetailApp.java:84-92 uses within(10s) on session starts; our
@@ -43,7 +42,6 @@ def order_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     The acctbal tier mirrors the derived-field pattern (birthday→age,
     OrderWideApp.java:118-126).
     """
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")
@@ -99,7 +97,6 @@ def order_detail_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     same predicate + watermarks is Spark's native stream-stream interval
     join. The ship-delay derivation mirrors P8 (OrderWideApp.java:73-93).
     """
-    tune(spark)
     orders = load(spark, sf_dir, "orders")
     lineitem = load(spark, sf_dir, "lineitem")
     lo = F.col("o_orderdate") - F.expr(f"INTERVAL {DETAIL_JOIN_DAYS} DAYS")
@@ -148,7 +145,6 @@ def payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adapter: per user, each 'purchase' event is the payment, the preceding
     'signup' event is the order-side record.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     pay = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("payment_id"),
@@ -202,7 +198,6 @@ def visit_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     later event is rewritten to '0'. One shuffle on the key — the same
     hash partitioning the reference's keyBy(mid) performs.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
@@ -229,7 +224,6 @@ def daily_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates is the same partial-dedup-then-shuffle plan a streaming
     dedup would produce.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     firsts = ev.select(
         F.col("user_id"), F.date_format("ts", "yyyy-MM-dd").alias("dt")
@@ -261,7 +255,6 @@ def jump_out(spark: SparkSession, sf_dir: str) -> DataFrame:
     event within SESSION_GAP) and nothing follows within JUMP_GAP.
     Integer epoch-micros keep the gap comparisons exact in both engines.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros("ts")

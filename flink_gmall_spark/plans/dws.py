@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from flink_gmall_spark.functions.parity import MONEY
 from flink_gmall_spark.functions.tokenize import tokens_col
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 #: gmall uses 10 s tumbling windows (VisitorStatsApp.java:164); the events
@@ -111,7 +110,6 @@ def visitor_stats_transform(ev: DataFrame) -> DataFrame:
 
 
 def visitor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
     return visitor_stats_transform(load(spark, sf_dir, "events"))
 
 
@@ -144,7 +142,6 @@ def product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``part`` dim joins on the broadcast path after the aggregation — agg
     first, enrich second, so the shuffle carries only (key, partials).
     """
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     agg = li.groupBy("l_partkey").agg(
@@ -189,7 +186,6 @@ def province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape of gmall's province_stats (window, province, count distinct
     orders, amount sum).
     """
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     load(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     load(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
@@ -233,7 +229,6 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_window`` / the T3 state machine. Integer epoch-micros keep
     every derived value exact in both engines.
     """
-    tune(spark)
     from pyspark.sql import Window
 
     ev = load(spark, sf_dir, "events")
@@ -310,7 +305,6 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging-window operator. Window end = last event + gap, which the
     oracle reproduces from the lag/cumsum formulation — proving the two
     sessionization paths agree."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = F.session_window("ts", f"{SESSION_GAP_SECONDS} seconds")
     return ev.groupBy(w.alias("w"), "user_id").agg(
@@ -350,7 +344,6 @@ def supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier-side stats rollup (the ProductStats shape keyed on the
     supply dimension): agg first, then broadcast-enrich with supplier ⋈
     nation so the shuffle carries only (key, partials)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     supplier = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
@@ -394,7 +387,6 @@ def keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (no Python in the loop); the Python ``ik_analyze`` UDF is the
     registered SQL-visible variant for CJK inputs (functions.tokenize).
     """
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", F.explode(tokens_col("text")).alias("keyword")
@@ -432,7 +424,6 @@ def sliding_visitor_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle mirrors the fan-out arithmetic exactly (each event lands
     in the two slide-aligned panes covering it). Exact uv per pane via
     COUNT(DISTINCT) — batch mode, so the two-level expand plan applies."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = F.window("ts", f"{SLIDE_SIZE_S} seconds", f"{SLIDE_STEP_S} seconds")
     agg = ev.groupBy(w.alias("w")).agg(
@@ -479,7 +470,6 @@ def keyword_stats_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg plan as the twin). It exists for API parity; pipelines at
     100 TB use keyword_stats.
     """
-    tune(spark)
     from flink_gmall_spark.functions.tokenize import register_keyword_udtf
 
     register_keyword_udtf(spark)

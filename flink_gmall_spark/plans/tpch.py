@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources import load
 
 Q1_CUTOFF = "2000-09-02"
@@ -38,7 +37,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: pricing summary report — the canonical wide aggregation
     (8 aggregates over 2 group keys after a date filter pushed into the
     scan). One partial→final hash agg; no joins."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= Q1_CUTOFF)
     disc_price_cents = F.floor(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
@@ -93,7 +91,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: unshipped high-revenue orders for one market segment —
     selective join then top-10 by revenue (TakeOrderedAndProject), with
     the order key as the total-order tiebreak."""
-    tune(spark)
     cust = load(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == Q3_SEGMENT
     )
@@ -134,7 +131,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5: revenue from local suppliers per nation in one region —
     the 6-way join with the same-nation (customer = supplier) condition;
     all dims broadcast, the fact side never shuffles before the rollup."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= Q5_FROM) & (F.col("o_orderdate") < Q5_TO)
@@ -192,7 +188,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: forecasting revenue change — a pure filter-and-sum whose
     predicates all push into the parquet scan; the canonical
     scan-efficiency probe (no join, no group key)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     f = li.filter(
         (F.col("l_shipdate") >= Q6_FROM)
@@ -219,7 +214,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: customers who returned items in one quarter, top 20 by
     lost revenue — selective fact filter, broadcast dims, TakeOrdered
     with the customer key as tiebreak."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= Q10_FROM) & (F.col("o_orderdate") < Q10_TO)
@@ -260,7 +254,6 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: promotion revenue share — conditional aggregation over
     a broadcast part join; the share is one double division of two
     deterministic integer-cent sums (no per-row float compare)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= Q14_FROM) & (F.col("l_shipdate") < Q14_TO)
     )
@@ -296,7 +289,6 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: large-volume orders — the HAVING-over-join shape: per-
     order quantity rollup, threshold filter, customer enrichment. The
     per-order aggregate reuses its own exchange for the join back."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -342,7 +334,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi join; the fixture lacks commit/receipt dates, so 'late' is a
     ship date more than Q4_LATE_DAYS past the order date, preserving
     Q4's correlated-EXISTS shape exactly)."""
-    tune(spark)
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= Q4_FROM) & (F.col("o_orderdate") < Q4_TO)
     )
@@ -385,7 +376,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part join; Catalyst extracts the common l_partkey=p_partkey
     conjunct so the join stays an equi-join with the OR as a post-join
     filter."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -425,7 +415,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the first's result (distribution of counts). Two shuffles by
     construction; the outer join's null side becomes the c_count=0
     bucket."""
-    tune(spark)
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     per_cust = (
@@ -459,7 +448,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-subquery shape; ties all surface, so no LIMIT nondeterminism).
     The revenue subtree is one DAG used by both the rows and the max —
     exchange reuse, not recompute."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= Q15_FROM) & (F.col("l_shipdate") < Q15_TO)
     )
@@ -500,7 +488,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (supplier nation, customer nation, ship year) for the unordered
     nation pair: the symmetric-disjunction join predicate
     ((A,B) OR (B,A)) evaluated after broadcast dim resolution."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -560,7 +547,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery becomes a per-part aggregate joined back to the fact; the
     threshold compare is integer cross-multiplication
     (den*qty*count < num*sum_qty), not a float avg."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     per_part = li.groupBy(F.col("l_partkey").alias("pp_key")).agg(
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"),
@@ -605,7 +591,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a conditional cents-sum over the total cents-sum per year: two
     deterministic integers and one double division, no float compare
     anywhere."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= Q8_FROM) & (F.col("o_orderdate") < Q8_TO)
@@ -688,7 +673,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit price — the correlated scalar-min subquery realized as a
     per-part aggregate equi-joined back, never a sort-per-group. Dims
     broadcast; the only shuffle keys on l_partkey."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
@@ -772,7 +756,6 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     profit by supplier nation and order year over parts matching a name
     fragment. The five-way star join broadcasts every dim; the fact
     shuffles once for the (nation, year) aggregate."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     supp = load(spark, sf_dir, "supplier")
@@ -821,7 +804,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the per-part aggregate (one broadcast of a 1-row DF), and the
     threshold compare is integer cross-multiplication, not a float
     fraction."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     supp = load(spark, sf_dir, "supplier")
     nation = load(spark, sf_dir, "nation")
@@ -873,7 +855,6 @@ def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema — lateness is ship date > order date + N days, grouped by
     line status): counts of high- vs low-priority orders among late
     shipments — the join + conditional-aggregation shape."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     j = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
@@ -913,7 +894,6 @@ def q16_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per (brand, type, size) — distinct pairs first (one shuffle),
     anti-join the exclusion list (broadcast), then count-distinct over
     the pruned pairs."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(
         (F.col("p_type") != Q16_EXCLUDED_TYPE)
@@ -960,7 +940,6 @@ def q20_concentrated_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (supplier IN (pairs WHERE correlated-agg threshold)). Integer
     cross-multiply for the fraction; semi join keeps supplier rows
     unduplicated."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(
         F.col("p_name").contains(Q20_NAME_FRAGMENT)
@@ -1022,7 +1001,6 @@ def q21_last_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS (other supplier) / NOT EXISTS (later shipper) pair realized
     as one per-order aggregate joined back; ties at the max all count,
     matching the EXISTS semantics. Top-N with full-key tiebreak."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     fli = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
@@ -1094,7 +1072,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The average compare is exact decimal cross-multiplication
     (bal * n > sum), the anti-join replaces NOT EXISTS, and the
     threshold aggregate broadcasts as a 1-row DF."""
-    tune(spark)
     cust = load(spark, sf_dir, "customer").withColumn(
         "cntrycode", F.pmod(F.col("c_nationkey"), F.lit(10)).cast("int")
     )

@@ -5,6 +5,11 @@ operators) registers here as a (DataFrame builder, DuckDB oracle SQL)
 pair. ``__spark_entry__.py`` re-exports this; tests/test_parity.py runs
 every pair side-by-side exactly like the driver does.
 
+``_register`` stores each builder wrapped so that it runs
+``session.tune`` first: every consumer of ``Query.fn`` runs under
+``RUNTIME_CONFS`` whoever built the session, and the builders themselves
+never tune.
+
 Registration ORDER matters operationally: the external driver samples the
 first 50 registrations for its per-round correctness run. The effective
 order is set by ``_SAMPLE_PRIORITY`` at the bottom of this module (the
@@ -15,6 +20,7 @@ every entry regardless of order.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -23,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from flink_gmall_spark import pipeline
 from flink_gmall_spark.operators import ann, curation, dedup, multimodal, retrieval, scale, textstats, udaf
 from flink_gmall_spark.plans import ads, dwd, dwm, dws, tpch
+from flink_gmall_spark.session import tune
 from flink_gmall_spark.streaming import jobs as stream_jobs
 from flink_gmall_spark.streaming import state as stream_state
 
@@ -57,7 +64,13 @@ def _register(
     tags: tuple[str, ...] = (),
 ) -> None:
     assert name not in _REGISTRY, f"duplicate query name: {name}"
-    _REGISTRY[name] = Query(name, fn, oracle, bench, tags)
+
+    @functools.wraps(fn)
+    def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tune(spark)
+        return fn(spark, sf_dir)
+
+    _REGISTRY[name] = Query(name, tuned, oracle, bench, tags)
 
 
 # =============================================================================

@@ -51,8 +51,12 @@ RUNTIME_CONFS = {
 def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime confs to an existing session (driver-provided or ours).
 
-    Safe to call repeatedly; called at the top of every registry query so
-    correctness does not depend on who constructed the session.
+    Safe to call repeatedly. Called once by each entry layer, so
+    correctness does not depend on who constructed the session: the
+    registry wraps every ``Query.fn`` in it, each ``plans.api`` function
+    calls it, and so do ``pipeline.build_warehouse`` and
+    ``pipeline.ads_hourly_from_stats``. The plans and operators below
+    them do not call it.
     """
     for k, v in RUNTIME_CONFS.items():
         spark.conf.set(k, v)
@@ -66,15 +70,12 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
 def get_spark(app_name: str = "flink-gmall-spark", cpus: str | None = None) -> SparkSession:
     """Build a tuned local session (used by tests and bench.py)."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+        .getOrCreate()
     )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

@@ -24,7 +24,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.sources.tables import normalize_timestamps
 from flink_gmall_spark.sources.tables import path as table_path
 
@@ -240,7 +239,6 @@ def twin(
     batch entry for a twin, checks the stream."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        tune(spark)
         drained = run_to_memory(fold(read_stream(spark, sf_dir, table)), mode)
         return drained if finish is None else finish(drained)
 
@@ -383,7 +381,6 @@ def stream_order_detail_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow over finite input the emitted set equals the batch join,
     which the shared DuckDB oracle checks.
     """
-    tune(spark)
     orders = (
         read_stream(spark, sf_dir, "orders")
         .withColumn("o_ts", F.col("o_orderdate").cast("timestamp"))
@@ -425,7 +422,6 @@ def stream_payment_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric J1 case. Shares ORACLE_PAYMENT_WIDE with the batch plan."""
     from flink_gmall_spark.plans.dwm import PAYMENT_JOIN_DAYS
 
-    tune(spark)
     ev_pay = read_stream(spark, sf_dir, "events")
     ev_base = read_stream(spark, sf_dir, "events")
     pay = (
@@ -474,7 +470,6 @@ def stream_product_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_set — the literal HashSet-of-order-ids trick the reference's
     ProductStatsApp keeps in its ReduceFunction (COUNT DISTINCT itself is
     illegal in streaming aggs). Shares ORACLE_PRODUCT_STATS."""
-    tune(spark)
     from flink_gmall_spark.functions.parity import MONEY
     from flink_gmall_spark.sources import load as load_batch
 
@@ -513,7 +508,6 @@ def stream_keyword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     UV had. Shares ORACLE_KEYWORD_STATS with the batch plan."""
     from flink_gmall_spark.functions.tokenize import tokens_col
 
-    tune(spark)
     docs = read_stream(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", F.explode(tokens_col("text")).alias("keyword")
@@ -594,7 +588,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic finite-input form of the same state machine."""
     from flink_gmall_spark.plans.dws import SESSION_GAP_SECONDS
 
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events")
     w = F.session_window("ts", f"{SESSION_GAP_SECONDS} seconds")
     agg = (
@@ -687,7 +680,6 @@ def stream_left_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
     before that horizon — the oracle encodes both legs (matches + the
     horizon-filtered antijoin), making eviction timing itself
     hash-checked, like the CEP entry."""
-    tune(spark)
     orders = (
         read_stream(spark, sf_dir, "orders")
         .withColumn("o_ts", F.col("o_orderdate").cast("timestamp"))
@@ -788,7 +780,6 @@ def stream_config_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE_CONFIG_ROUTING."""
     from flink_gmall_spark.plans.dwd import ROUTING_CONFIG, ROUTING_SCHEMA
 
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events")
     cfg = spark.createDataFrame(ROUTING_CONFIG, ROUTING_SCHEMA)
     routed = ev.join(F.broadcast(cfg), ev.event_type == cfg.source_table, "inner")
@@ -827,7 +818,6 @@ def stream_province_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares ORACLE_PROVINCE_STATS."""
     from flink_gmall_spark.sources import load as load_batch
 
-    tune(spark)
     orders = read_stream(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("s_orders")
     load_batch(spark, sf_dir, "customer").createOrReplaceTempView("s_customer")
@@ -877,7 +867,6 @@ def stream_full_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
     sources, so BOTH eviction boundaries are encoded in the oracle — the
     two NOT-EXISTS legs each carry their own horizon filter, making the
     two-sided state-eviction timing hash-checked."""
-    tune(spark)
     orders = (
         read_stream(spark, sf_dir, "orders")
         .withColumn("o_ts", F.col("o_orderdate").cast("timestamp"))
@@ -975,7 +964,6 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares ORACLE_SLIDING_VISITOR_WINDOWS with the batch plan."""
     from flink_gmall_spark.plans.dws import SLIDE_SIZE_S, SLIDE_STEP_S
 
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events")
     w = F.window("ts", f"{SLIDE_SIZE_S} seconds", f"{SLIDE_STEP_S} seconds")
     zero = F.lit(0).cast("long")
@@ -1016,7 +1004,6 @@ def stream_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from flink_gmall_spark.operators.scale import RANGE_BIN_US
 
-    tune(spark)
     err = (
         read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "error")
@@ -1110,7 +1097,6 @@ def stream_pipeline_payment_province(spark: SparkSession, sf_dir: str) -> DataFr
     from flink_gmall_spark.functions.parity import MONEY
     from flink_gmall_spark.sources import load as load_batch
 
-    tune(spark)
     order = (
         read_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "signup")
@@ -1255,7 +1241,6 @@ def stream_ads_hourly_from_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from flink_gmall_spark.scratch import scratch_dir
 
-    tune(spark)
     tag = _hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
     ).hexdigest()[:12]
@@ -1324,7 +1309,6 @@ def stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAM; each arriving vector emits its codes once, stateless, append
     mode. Exercises the stream-static broadcast join with a map-only
     payload; shares ORACLE_PQ_ENCODE with the batch twin."""
-    tune(spark)
     from flink_gmall_spark.operators.ann import _pq_codes
     from flink_gmall_spark.sources import load
 
@@ -1363,7 +1347,6 @@ def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.scratch import scratch_dir
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     tag = _hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
     ).hexdigest()[:12]
@@ -1412,7 +1395,6 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     # static build side (the batch product a scheduled job maintains)
     docs_static = load(spark, sf_dir, "documents")
     sh_static = _shingles(docs_static)
@@ -1505,7 +1487,6 @@ def zorder_stream_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     from flink_gmall_spark.operators.scale import zorder_cluster
     from flink_gmall_spark.scratch import scratch_dir
 
-    tune(spark)
     tag = hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
         f"|{next(_ZC_CALLS)}".encode()
@@ -1591,7 +1572,6 @@ def stream_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs_static = load(spark, sf_dir, "documents")
     sh_static = _shingles(docs_static).select(
         F.col("doc_id").alias("container_doc"), "s"
@@ -1664,7 +1644,6 @@ def stream_pretrain_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         pretrain_gate,
     )
 
-    tune(spark)
     docs = read_stream(spark, sf_dir, "documents")
     deduped = (
         pretrain_gate(docs)
@@ -1696,7 +1675,6 @@ def stream_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     c12, c1v, vocab = _lm_count_tables(load(spark, sf_dir, "documents"))
     g = _lm_bigrams(read_stream(spark, sf_dir, "documents"))
     served = lm_attach_counts(g, c12, c1v, vocab)
@@ -1721,7 +1699,6 @@ def stream_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     warr = _dsir_warr(load(spark, sf_dir, "documents"))
     docs = read_stream(spark, sf_dir, "documents")
     return run_to_memory(_dsir_ledger(_dsir_scored(docs, warr)), "complete")
@@ -1754,7 +1731,6 @@ def stream_ivf_range_serve(
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     cand = (
         _ivf_probe_candidates(emb)
@@ -1834,7 +1810,6 @@ def _bm25_serve(spark: SparkSession, sf_dir: str, logidf: bool = False) -> DataF
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     score_table = logidf_scored_postings if logidf else scored_postings
     sp = score_table(load(spark, sf_dir, "documents"))
     occ = query_occurrences(read_stream(spark, sf_dir, "documents"))
@@ -1866,7 +1841,6 @@ def stream_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.operators.ann import ann_topk
     from flink_gmall_spark.operators.retrieval import retrieval_eval_finish
 
-    tune(spark)
     # the finisher joins the lex list against itself (directly in the
     # stacked union AND through the fused branch) — a MemoryPlan leaf is
     # not multi-instance, so give the drained, query-bounded rank list a
@@ -1893,7 +1867,6 @@ def stream_rrf_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.operators.ann import ann_topk
     from flink_gmall_spark.operators.retrieval import rrf_k_sweep_finish
 
-    tune(spark)
     lex = stream_bm25_serve(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -1919,7 +1892,6 @@ def stream_hybrid_rrf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.operators.ann import ann_topk
     from flink_gmall_spark.operators.retrieval import rrf_finish
 
-    tune(spark)
     # the lexical leg IS stream_bm25_serve (review r11: one definition of
     # the serve-side streaming query, not a hand-synced copy)
     lex = stream_bm25_serve(spark, sf_dir).select(
@@ -1961,7 +1933,6 @@ def stream_query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs_static = load(spark, sf_dir, "documents")
     sp = scored_postings(docs_static)
     occ = query_occurrences(read_stream(spark, sf_dir, "documents"))
@@ -2000,7 +1971,6 @@ def stream_retrieval_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs_static = load(spark, sf_dir, "documents")
     served = bm25_match(
         query_occurrences(read_stream(spark, sf_dir, "documents")),
@@ -2032,7 +2002,6 @@ def stream_bm25_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     feat = posting_features(load(spark, sf_dir, "documents"))
     occ = query_occurrences(read_stream(spark, sf_dir, "documents"))
     matched = bm25_match(occ, feat, broadcast=False).select(
@@ -2054,7 +2023,6 @@ def stream_rrf_weighted_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         rrf_weighted_finish,
     )
 
-    tune(spark)
     lex = stream_bm25_serve(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -2082,7 +2050,6 @@ def stream_bm25_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.operators.retrieval import bm25_negatives_finish
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     emb = _with_norm(load(spark, sf_dir, "embeddings"))
     exact = hard_negatives(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("doc_id")
@@ -2117,7 +2084,6 @@ def stream_phrase_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     idx = pos_index(load(spark, sf_dir, "documents"))
     qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
     matches = phrase_adjacent_matches(qbg, idx, broadcast=False)
@@ -2143,7 +2109,6 @@ def stream_proximity_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     idx = pos_index(load(spark, sf_dir, "documents"))
     qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
     matches = proximity_matches(qbg, idx, broadcast=False)
@@ -2164,7 +2129,6 @@ def stream_proximity_unordered_serve(spark: SparkSession, sf_dir: str) -> DataFr
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     idx = pos_index(load(spark, sf_dir, "documents"))
     qbg = query_bigram_occurrences(read_stream(spark, sf_dir, "documents"))
     matches = proximity_matches(qbg, idx, broadcast=False, ordered=False)
@@ -2196,7 +2160,6 @@ def stream_sdm_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     sp, idx = scored_postings(docs), pos_index(docs)
     qocc = query_occurrences(read_stream(spark, sf_dir, "documents"))
@@ -2260,7 +2223,6 @@ def stream_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.functions.tokenize import tokens_col
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     terms = [
         (pid, ti, tok, len(p.split()))
         for pid, p in enumerate(BLOCKLIST_PHRASES)
@@ -2331,7 +2293,6 @@ def stream_exact_substring_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     idx = positional_run_grams(load(spark, sf_dir, "documents"))
     sg = raw_positional_grams(read_stream(spark, sf_dir, "documents"))
     matches = substring_gram_matches(idx, sg)
@@ -2368,7 +2329,6 @@ def stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_gmall_spark.sources import load
 
-    tune(spark)
     _, vocab = _unigram_vocab(load(spark, sf_dir, "documents"))
     cands = (
         _word_occurrences(read_stream(spark, sf_dir, "documents"))

@@ -36,7 +36,6 @@ from flink_gmall_spark.plans.ads import (
     TIMED_FUNNEL_WINDOW_S,
 )
 from flink_gmall_spark.plans.dwm import JUMP_GAP_US, SESSION_GAP_US
-from flink_gmall_spark.session import tune
 from flink_gmall_spark.streaming.jobs import (
     read_stream,
     run_to_memory,
@@ -86,7 +85,6 @@ def _t1_fn(
 
 
 def visit_flag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "event_id", "user_id", F.unix_micros("ts").alias("us")
     )
@@ -134,7 +132,6 @@ def _t2_fn(
 def daily_uv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 streaming dedup, then a batch rollup of the emitted first-visits
     to uv counts (matches plans.dwm.ORACLE_DAILY_UV)."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id", F.date_format("ts", "yyyy-MM-dd").alias("dt")
     )
@@ -205,7 +202,6 @@ def daily_uv_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_DailyUVProcessorTWS", (_DailyUVProcessor, StatefulProcessor), {}
     )()
 
-    tune(spark)
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
     spark.conf.set(
@@ -308,7 +304,6 @@ def jump_out_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeout-confirmed jumps once the event-time watermark passes them;
     starts still inside the watermark horizon at end-of-stream stay
     pending (exactly Flink CEP's within()-window semantics)."""
-    tune(spark)
     ev = (
         read_stream(spark, sf_dir, "events", split=True)
         .withWatermark("ts", "0 seconds")
@@ -378,7 +373,6 @@ def event_transitions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     event in batch N pairing with their first in batch N+1) is exactly
     what the retained state proves; the batch oracle is shared verbatim.
     """
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         "event_type",
@@ -434,7 +428,6 @@ def last_touch_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded-key channel ledger rolls up batch-side. Shares the batch
     oracle verbatim — the carry window and the state machine must land
     on identical credits."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         "event_type",
@@ -536,7 +529,6 @@ def pit_features_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-k probe may look back on is in a batch ≤ k. A production
     deployment would gate probes on the event stream's watermark to get
     the same guarantee."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd").alias("d"),
@@ -757,7 +749,6 @@ def pit_features_gated_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, so the horizon is the last order date: every strictly-earlier
     probe clears the gate with the batch PIT features (all-zero here),
     and final-day probes stay pending."""
-    tune(spark)
     # BOTH legs carry a watermarked event-time column through the union
     # (the analyzer requires it for event-time timeouts, and arbitrary
     # stateful ops do NOT late-filter input, so probe rows are never
@@ -919,7 +910,6 @@ def cdc_retract_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.sources.pydatasource import GmallCDCStreamDataSource
     from flink_gmall_spark.sources.tables import load, path as table_path
 
-    tune(spark)
     spark.dataSource.register(GmallCDCStreamDataSource)
     # one cheap aggregate over the source table sizes the finite backlog
     # (insert per order + update per 'F' + delete per %7 key) so the
@@ -995,7 +985,6 @@ def session_transitions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored tail timestamp replaces the batch plan's three windows), the
     bounded-key rollup runs on the emitted steps. Shares the batch
     oracle verbatim."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         "event_type",
@@ -1065,7 +1054,6 @@ def cohort_retention_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends one matrix increment, and the bounded-key (cohort_day,
     day_offset) rollup runs on the emitted increments. Shares the batch
     oracle verbatim."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id", F.date_format("ts", "yyyy-MM-dd").alias("dt")
     )
@@ -1120,7 +1108,6 @@ def timed_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     viewed/converted markers from the state machine, the 1-row integer
     ledger (with the HALF_UP-x100 rate and zero-view NULL guard) rolled
     up batch-side. Shares the batch oracle verbatim."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         "event_type",
@@ -1218,7 +1205,6 @@ def rolling_activity_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits each day's closed feature row append-only. Shares the batch
     oracle verbatim. This is what replaces the nightly backfill when the
     model consumes same-day features."""
-    tune(spark)
     ev = read_stream(spark, sf_dir, "events", split=True).select(
         "user_id",
         F.unix_date(F.to_date("ts")).cast("long").alias("day_num"),

@@ -147,7 +147,7 @@ def test_dim_join_degrades_to_smj_without_broadcast(spark, sf_dir):
     dims-stop-fitting-in-memory contingency of SCALE.md §Joins. Simulated
     by disabling auto-broadcast; order_detail_wide carries no broadcast
     hint, so the planner must re-decide from size estimates."""
-    df = dwm.order_detail_wide(spark, sf_dir)  # builder runs tune() — set after
+    df = dwm.order_detail_wide(spark, sf_dir)  # lazy: nothing planned yet
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")

@@ -282,22 +282,10 @@ def _band_sigs(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
     return sig_wide, sig
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, materialize_shingles: bool = False
-) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: banded min-hash signatures generate candidate
     pairs via an equi-join; exact Jaccard verifies. The scale path — work
-    is O(docs x bands) + a join on band signatures, never all-pairs.
-
-    ``materialize_shingles`` snapshots the shingle subtree to parquet and
-    re-reads it, so the three consumers (signatures, verify-a, verify-b)
-    scan a file instead of recomputing tokenize+explode. Measured at
-    sf0.1/local[32]: first (cold-plan) run 4.6 s vs 10.6 s baseline, but
-    steady-state 2.9 s vs 2.8 s — AQE exchange reuse already dedupes the
-    subtree at runtime, so the default stays off; the flag is the right
-    call only for cold single-shot runs or when the shingle set feeds
-    MANY separate actions (e.g. iterative connected components over a
-    fresh corpus)."""
+    is O(docs x bands) + a join on band signatures, never all-pairs."""
     # NO spread_small_scan here — measured at sf0.1 (r16, two
     # interleaved pairs): 2.77 vs 2.39 s / 2.48 vs 2.40 s — this plan
     # stays declarative (no checkpoint), and the spread exchange feeds
@@ -306,20 +294,6 @@ def minhash_lsh_pairs(
     # CHECKPOINT is a real single-task barrier the spread does break.
     docs = load(spark, sf_dir, "documents")
     sh = _shingles(docs)
-    if materialize_shingles:
-        import hashlib as _hl
-        import os as _os
-
-        from flink_gmall_spark.scratch import scratch_dir
-
-        # app id in the tag: two concurrent sessions (driver + CI) on the
-        # same sf_dir must not overwrite each other's parquet mid-read —
-        # same race scale._bucketed_table guards against.
-        app = spark.sparkContext.applicationId
-        tag = _hl.md5(f"{_os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-        p = scratch_dir("shingles", tag)
-        sh.write.mode("overwrite").parquet(p)
-        sh = spark.read.parquet(p)
     sig_wide, sig = _band_sigs(sh)
     a = sig.alias("a")
     b = sig.alias("b")

@@ -11,9 +11,8 @@ distinct pre-dedups on the salted key).
 
 from __future__ import annotations
 
-import hashlib
-import itertools
 import os
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -96,15 +95,13 @@ def _bucketed_df_table(
     bucketing). Subsequent scans expose the bucketing to the planner, so
     equi-joins and aggregations on ``key`` need no Exchange — the physical
     layout IS the shuffle, paid once at write time."""
-    # tag includes the application id: concurrent sessions (driver + CI)
-    # must not overwrite each other's files mid-read — same reason the
-    # stream staging dir renames atomically. Within a session the catalog
-    # check makes materialization once-only.
-    from flink_gmall_spark.scratch import scratch_dir
+    # session-tagged: concurrent sessions (driver + CI) must not
+    # overwrite each other's files mid-read — same reason the stream
+    # staging dir renames atomically. Within a session the catalog check
+    # makes materialization once-only.
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    name = f"fgs_bkt_{label}_{tag}"
+    name = f"fgs_bkt_{label}_{session_tag(spark, sf_dir)}"
     if not spark.catalog.tableExists(name):
         path = scratch_dir("bucketed", name)
         (
@@ -305,12 +302,10 @@ def _date_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     partitioned parquet layout — the standard lake layout at 100 TB,
     where a day predicate must prune to one directory instead of
     scanning the corpus. Paid once; every pruning entry reuses it."""
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    path = scratch_dir("events_by_dt", tag)
+    path = scratch_dir("events_by_dt", session_tag(spark, sf_dir))
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -355,12 +350,10 @@ GROUP BY event_type
 def _date_dim(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the calendar dim next to the partitioned fact: one row
     per event day with its ISO weekday — the dim side of the star join."""
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
-    app = spark.sparkContext.applicationId
-    tag = hashlib.md5(f"{os.path.realpath(sf_dir)}|{app}".encode()).hexdigest()[:8]
-    path = scratch_dir("date_dim", tag)
+    path = scratch_dir("date_dim", session_tag(spark, sf_dir))
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -479,10 +472,9 @@ GROUP BY o_orderpriority
 
 COMPACT_EPOCHS = 8  # simulated micro-batch count in the small-file store
 COMPACT_TARGET_FILES = 2
-_COMPACT_CALLS = itertools.count()  # per-call nonce: no two invocations share scratch paths
 # Scratch base of the LATEST call, for test introspection ONLY. Valid
 # only under SERIAL invocation: concurrent same-app calls each get their
-# own nonce-tagged paths (no path race), but a reader of this global can
+# own uuid-tagged paths (no path race), but a reader of this global can
 # observe another call's base (r6 ADVICE) — tests that use it must not
 # run epoch_compaction concurrently.
 LAST_COMPACTION_BASE: str | None = None
@@ -512,15 +504,11 @@ def epoch_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_gmall_spark.scratch import scratch_dir
     from flink_gmall_spark.sources import load
 
-    # The nonce makes each invocation's store/compacted paths unique within
-    # one Spark application — repeated or concurrent calls in the same app
-    # can no longer race on the overwrite or read mixed file sets.
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_COMPACT_CALLS)}".encode()
-    ).hexdigest()[:12]
+    # A per-call tag makes each invocation's store/compacted paths unique
+    # — repeated or concurrent calls in the same app can no longer race
+    # on the overwrite or read mixed file sets.
     global LAST_COMPACTION_BASE
-    base = LAST_COMPACTION_BASE = scratch_dir("compaction", tag)
+    base = LAST_COMPACTION_BASE = scratch_dir("compaction", uuid.uuid4().hex[:12])
     store = os.path.join(base, "store")
     compacted = os.path.join(base, "compacted")
 
@@ -651,16 +639,15 @@ ORACLE_DATA_QUALITY_REPORT = _oracle_quality()
 
 ZORDER_BITS = 16
 ZORDER_FILES = 8
-_ZORDER_CALLS = itertools.count()  # per-call nonce, same discipline as compaction
 
 
-def zvalue_expr(a: str, b: str, bits: int = ZORDER_BITS) -> str:
+def zvalue_expr(a: str, b: str) -> str:
     """Bit-interleaved (Morton / Z-order) key of two non-negative int
     expressions — pure shifts/AND/addition, so Spark SQL and DuckDB
     compute the identical BIGINT: ``a`` occupies even bit positions,
     ``b`` odd. 16 bits per dimension = 32-bit z-values."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
@@ -710,16 +697,12 @@ def zorder_rollup(clustered: DataFrame) -> DataFrame:
 def zorder_rewrite(spark: SparkSession, sf_dir: str) -> str:
     """The rewrite itself (shared by the registry entry and the
     clustering-proof test): returns the directory of the z-ordered
-    store. Nonce-tagged per call — concurrent invocations never race on
-    the overwrite (the epoch_compaction discipline)."""
+    store. Tagged per call — concurrent invocations never race on the
+    overwrite (the epoch_compaction discipline)."""
     from flink_gmall_spark.scratch import scratch_dir
     from flink_gmall_spark.sources import load
 
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_ZORDER_CALLS)}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(scratch_dir("zorder", tag), "clustered")
+    out = os.path.join(scratch_dir("zorder", uuid.uuid4().hex[:12]), "clustered")
 
     ev = load(spark, sf_dir, "events").select(
         "event_id",

@@ -105,19 +105,13 @@ def pipeline_e2e_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, partitioned re-read, re-aggregate. Decimal discipline across
     the sink boundary (2dp exactified doubles recast to DECIMAL before
     re-summing) is what keeps the final hash exact."""
-    import hashlib
-    import os
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
-    from flink_gmall_spark.scratch import scratch_dir
-
-    # keyed by (sf_dir, appId): repeated runs in one session (bench runs
+    # keyed per session: repeated runs in one session (bench runs
     # everything twice) REUSE one dir via overwrite writes, and the
     # scratch registry removes it at exit — previously a fresh uuid dir
     # per call accumulated without bound.
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = scratch_dir("wh", tag)
+    out = scratch_dir("wh", session_tag(spark, sf_dir))
     tables = build_warehouse(spark, sf_dir, out)
     return ads_hourly_from_stats(spark, tables["visitor_stats"])
 

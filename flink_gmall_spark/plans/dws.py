@@ -301,11 +301,21 @@ GROUP BY 1, 2
 
 def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``session_window`` (gap-merged event-time windows) — the
-    built-in form of gap sessionization; in streaming it is the stateful
-    merging-window operator. Window end = last event + gap, which the
-    oracle reproduces from the lag/cumsum formulation — proving the two
-    sessionization paths agree."""
-    ev = load(spark, sf_dir, "events")
+    built-in form of gap sessionization. Window end = last event + gap,
+    which the oracle reproduces from the lag/cumsum formulation — proving
+    the two sessionization paths agree."""
+    return session_windows_transform(load(spark, sf_dir, "events"))
+
+
+def session_windows_transform(ev: DataFrame) -> DataFrame:
+    """The sessionization transform, batch or stream. On the incremental
+    engine (stream_session_windows) it is the stateful MERGING window
+    operator — unlike tumbling windows, open sessions merge when a
+    bridging event arrives — drained in complete mode so every final
+    merged session is emitted and the batch oracle applies verbatim.
+    Production would run append + watermark to bound state; complete
+    over availableNow is the deterministic finite-input form of the same
+    state machine."""
     w = F.session_window("ts", f"{SESSION_GAP_SECONDS} seconds")
     return ev.groupBy(w.alias("w"), "user_id").agg(
         F.count(F.lit(1)).alias("n_events")

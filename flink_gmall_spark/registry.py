@@ -11,16 +11,22 @@ every pair side-by-side exactly like the driver does.
 never tune.
 
 Registration ORDER matters operationally: the external driver samples the
-first 50 registrations for its per-round correctness run. The effective
-order is set by ``_SAMPLE_PRIORITY`` at the bottom of this module (the
-per-round evidence strategy lives there); the blocks below keep their
-historical grouping. Local parity (tests/test_parity.py) always runs
-every entry regardless of order.
+first 50 registrations for its per-round correctness run. At import the
+bottom of this module moves the sample window to the front: it is derived
+by ``staged_window`` from the committed ``CORRECTNESS_r*.json`` ledger
+beside the package, plus the hand-declared ``_REVERIFY_HEAD``. Without a
+ledger (an installed copy) registration order stands. The blocks below
+keep their historical grouping. Local parity (tests/test_parity.py)
+always runs every entry regardless of order.
 """
 
 from __future__ import annotations
 
 import functools
+import glob
+import json
+import os
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -258,7 +264,7 @@ _register("stream_t2_daily_uv", stream_state.daily_uv_stream, dwm.ORACLE_DAILY_U
 # needs google.protobuf, absent from this image. tests/test_streaming.py
 # runs it against the same oracle whenever protobuf is importable.
 _register("stream_t3_jump_out", stream_state.jump_out_stream, stream_state.ORACLE_JUMP_OUT_STREAM, tags=("T3", "T4", "U3", "streaming", "cep"))
-_register("stream_session_windows", stream_jobs.stream_session_windows, dws.ORACLE_SESSION_WINDOWS, tags=("sessionization", "streaming"))
+_register("stream_session_windows", stream_jobs.twin("events", dws.session_windows_transform, "complete"), dws.ORACLE_SESSION_WINDOWS, tags=("sessionization", "streaming"))
 _register("stream_keyword_stats", stream_jobs.stream_keyword_stats, dws.ORACLE_KEYWORD_STATS, tags=("F2", "A4", "streaming"))
 _register("stream_windowed_append", stream_jobs.twin("events", stream_jobs._windowed_append_stats, "append"), stream_jobs.ORACLE_WINDOWED_APPEND, tags=("T5", "T6", "T7", "streaming", "append-mode"))
 _register("stream_left_outer_join", stream_jobs.stream_left_outer_interval_join, stream_jobs.ORACLE_LEFT_OUTER_INTERVAL, tags=("J1", "T4", "streaming", "outer-join"))
@@ -463,7 +469,7 @@ _register("curation_blocklist_scrub", curation.blocklist_scrub, curation.ORACLE_
 _register("stream_blocklist_scrub", stream_jobs.stream_blocklist_scrub, curation.ORACLE_BLOCKLIST_SCRUB, tags=("streaming", "curation", "policy-filter", "phrase-match", "serving", "append-mode"))
 
 # --- round 15: intra-document exact-substring branch (VERDICT r14 ask #3;
-# depth-over-breadth round — ≤5 net-new entries, see _SAMPLE_PRIORITY) ---
+# depth-over-breadth round — ≤5 net-new entries per round) ---
 _register("dedup_intra_doc_spans", dedup.intra_doc_spans, dedup.ORACLE_INTRA_DOC_SPANS, tags=("dedup", "exact-substring", "intra-document", "interval-merge", "quality"))
 _register("curation_strip_all_spans", dedup.strip_all_dup_spans, dedup.ORACLE_STRIP_ALL_SPANS, tags=("curation", "dedup", "exact-substring", "intra-document", "corpus-rewrite", "e2e"))
 # tokenizer serving at ingest (VERDICT r14 ask #4): the missing twin —
@@ -472,74 +478,84 @@ _register("stream_unigram_encode", stream_jobs.stream_unigram_encode, curation.O
 
 
 # =============================================================================
-# Per-round sample window (the driver samples the FIRST 50 registrations,
-# so ordering is evidence strategy). Ever-green union covers every
-# pre-round-13 entry (CORRECTNESS_r01-r12), so FRESHNESS is the operative
-# invariant. From round 13 the window is MACHINE-DERIVED, not hand-staged
-# (VERDICT r12 ask #5): window = never-driver-verified entries (new
-# additions) + _REVERIFY_HEAD (entries whose expressions changed since
-# their last green row - the same-round re-verification discipline,
-# declared explicitly here) + the STALEST remaining entries by
-# (last-green round, registration order) up to 50.
-# tools/coverage_report.py implements the rule (staged_window) and emits
-# the per-entry last-green ledger into COVERAGE.md;
-# tests/test_freshness.py asserts this list matches the rule against the
-# committed CORRECTNESS_r*.json - restaging each round is forced by CI,
-# not by comment discipline.
+# Sample window. The driver samples the FIRST 50 registrations per round,
+# so registration order is evidence strategy. The window is derived here,
+# at import, from the committed CORRECTNESS_r*.json ledger: never-green
+# entries (new additions) first, then _REVERIFY_HEAD, then the stalest
+# remainder by (last-green round, registration order). Landing a new
+# ledger file rotates the window by itself; tools/coverage_report.py
+# prints the per-entry ledger into COVERAGE.md and
+# tests/test_freshness.py checks the first 50 registrations against it.
 # =============================================================================
+
+WINDOW_SIZE = 50  # entries the driver samples per round
+
+# The ledger sits at the repo root, beside the package - found by the
+# module's location, never the cwd (the driver imports from elsewhere).
+# An installed copy ships without it and keeps registration order.
+_LEDGER_GLOB = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CORRECTNESS_r*.json"
+)
+
+
+def last_green_rounds() -> dict[str, int]:
+    """Per-entry last GREEN driver round, parsed from the committed
+    CORRECTNESS_r*.json files. Green = no error, row counts match, and
+    neither schema nor hash recorded a mismatch (rows-only entries omit
+    the hash field - absent is not a failure)."""
+    last: dict[str, int] = {}
+    for f in sorted(glob.glob(_LEDGER_GLOB)):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+        try:
+            with open(f) as fh:
+                rows = json.load(fh)
+        except (OSError, ValueError):  # unreadable or half-written ledger
+            continue
+        for name, v in rows.items():
+            green = (
+                not v.get("err")
+                and v.get("rows_match")
+                and v.get("schema_match") is not False
+                and v.get("hash_match") is not False
+            )
+            if green:
+                last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def staged_window(
+    reg_order, last: dict[str, int], reverify, n: int = WINDOW_SIZE
+) -> list[str]:
+    """THE window rule: never-green entries first (new additions), then
+    the declared changed-code re-verifications, then the stalest
+    remainder by (last-green round, registration order) up to n."""
+    new = [e for e in reg_order if e not in last]
+    head = new + [e for e in reverify if e not in new]
+    assert len(head) <= n, (
+        f"{len(head)} new+reverify entries exceed the {n}-slot window; "
+        "land them across rounds or the driver will never sample some"
+    )
+    idx = {e: i for i, e in enumerate(reg_order)}
+    rest = [e for e in reg_order if e in last and e not in head]
+    fill = sorted(rest, key=lambda e: (last[e], idx[e]))[: n - len(head)]
+    return head + fill
+
 
 # Registration (file) order BEFORE the window reorder below - the
 # tie-break among equally-stale entries, stable across rounds.
 _REGISTRATION_ORDER = tuple(_REGISTRY)
 
-# Entries whose expressions changed this round AFTER their last green
-# driver row (same-round re-verification). NOTE the cross-round
-# coupling (ADVICE r13): landing a new CORRECTNESS_r*.json ledger file
-# advances the derived window, so the ledger, a restaged
-# _SAMPLE_PRIORITY, and a cleared/updated _REVERIFY_HEAD must land in
-# ONE commit or tests/test_freshness.py fails in between.
+# Entries whose expressions changed AFTER their last green driver row
+# (same-round re-verification) - the one part of the window declared by
+# hand. A stale entry here costs a window slot, nothing more.
 # Round 17: cleared — all 12 r16 entries greened in CORRECTNESS_r16;
-# moving 23 stream twins onto twin() left their plans unchanged.
+# moving 24 stream twins onto twin() left their plans unchanged.
 _REVERIFY_HEAD: tuple[str, ...] = ()
 
-# Round-17 window, derived by the rule above: no never-green entries and
-# an empty re-verify head, so the window is pure stalest fill (the r10
-# cohort, then the oldest r11 entries, registration order).
-# tests/test_freshness.py holds it to the rule.
-_SAMPLE_PRIORITY = [
-    # stalest fill: last green r10, registration order
-    "sim_ivf_cell_balance", "dedup_funnel_report",
-    "stream_containment_probe", "text_quality_threshold_sweep",
-    "sim_pq_distortion", "curation_span_corruption",
-    "stream_quality_threshold_sweep", "sim_ivf_nprobe_sweep",
-    "stream_span_corruption", "curation_bpe_fertility",
-    "dedup_dup_ngram_coverage", "curation_dataset_card",
-    "curation_global_shuffle", "curation_padding_waste",
-    "stream_padding_waste", "sim_ann_filtered_topk",
-    "sim_ivf_filtered_topk", "curation_chunk_overlap",
-    "curation_repeat_epochs", "stream_global_shuffle",
-    "stream_chunk_overlap", "stream_repeat_epochs",
-    "dedup_jaccard_prefix", "curation_pretrain_build",
-    "text_classifier_roc", "dedup_containment_apply",
-    "stream_classifier_roc", "stream_pretrain_build",
-    "dedup_winnowing_fingerprints", "dedup_winnowing_pairs",
-    "stream_winnowing_fingerprints", "sim_range_search",
-    "sim_ivf_range_search", "curation_curriculum_stages",
-    "sim_hard_negatives_ivf_sampled", "stream_ivf_range_serve",
-    "curation_preference_pairs", "dedup_winnowing_recall_report",
-    # stalest fill: last green r11, registration order
-    "tpch_q1", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7",
-    "tpch_q8", "tpch_q10", "tpch_q13", "tpch_q14", "tpch_q15",
-    "ads_user_activity_similarity",
-]
-assert len(_SAMPLE_PRIORITY) == 50, len(_SAMPLE_PRIORITY)
-assert len(set(_SAMPLE_PRIORITY)) == 50
-_missing = [n for n in _SAMPLE_PRIORITY if n not in _REGISTRY]
-assert not _missing, f"sample priority names not registered: {_missing}"
-_REGISTRY = {
-    **{n: _REGISTRY[n] for n in _SAMPLE_PRIORITY},
-    **{n: q for n, q in _REGISTRY.items() if n not in _SAMPLE_PRIORITY},
-}
+_last_green = last_green_rounds()
+if _last_green:  # no ledger beside the package: registration order stands
+    _window = staged_window(_REGISTRATION_ORDER, _last_green, _REVERIFY_HEAD)
+    _REGISTRY = {n: _REGISTRY[n] for n in (*_window, *_REGISTRATION_ORDER)}
 
 
 def registry() -> dict[str, Query]:

@@ -1,8 +1,8 @@
 """Session-scoped scratch directories with bounded lifetime.
 
 Every materialization the engine stages in the system tempdir
-(warehouse runs, 2PC dim-sink epochs, bucketed tables, shingle
-caches) allocates through :func:`scratch_dir`, which gives three
+(warehouse runs, 2PC dim-sink epochs, bucketed tables, compaction
+stores) allocates through :func:`scratch_dir`, which gives three
 guarantees no ad-hoc ``tempfile.gettempdir()`` join provides:
 
 1. **Own cleanup** — every dir this process creates is removed at
@@ -18,6 +18,7 @@ guarantees no ad-hoc ``tempfile.gettempdir()`` join provides:
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import tempfile
@@ -70,10 +71,20 @@ def _sweep_stale() -> None:
 def scratch_dir(kind: str, tag: str) -> str:
     """A created-on-demand scratch dir ``<tmp>/fgs_scratch/<kind>/<tag>``,
     registered for end-of-process removal. Reusing the same (kind, tag)
-    returns the same path — callers key the tag by (sf_dir, appId) when
-    they want per-session reuse, or a uuid when they want isolation."""
+    returns the same path — callers key the tag by :func:`session_tag`
+    when they want per-session reuse, or a uuid when they want
+    isolation."""
     d = os.path.join(ROOT, kind, tag)
     os.makedirs(d, exist_ok=True)
     _created.add(d)
     _sweep_stale()
     return d
+
+
+def session_tag(spark, sf_dir: str) -> str:
+    """12 hex characters keyed by (realpath of ``sf_dir``, Spark
+    application id): stable for repeat calls in one session on one input,
+    distinct across inputs and across concurrent sessions (driver + CI),
+    so per-session scratch reuse never reads another session's files."""
+    key = f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
+    return hashlib.md5(key.encode()).hexdigest()[:12]

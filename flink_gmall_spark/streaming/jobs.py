@@ -15,7 +15,6 @@ file source + memory sink, which exercises the same incremental engine.
 from __future__ import annotations
 
 import hashlib
-import itertools
 import os
 import tempfile
 import uuid
@@ -245,11 +244,13 @@ def twin(
     return run
 
 
+DRAIN_IDLE_POLLS = 3  # no-target drain signal: idle status polls in a row
+
+
 def run_to_memory_drain(
     result: DataFrame,
     output_mode: str,
     target_input_rows: int | None = None,
-    idle_triggers: int = 3,
     timeout_s: float = 300.0,
 ) -> DataFrame:
     """run_to_memory for rate-limited Python streaming sources.
@@ -268,7 +269,7 @@ def run_to_memory_drain(
     DATA batch is reported promptly). Without a target it falls back to
     the engine's own drain signal: once at least one batch has run, a
     drained finite source shows ``isDataAvailable=False`` with no
-    trigger in flight for ``idle_triggers`` consecutive polls. (A
+    trigger in flight for ``DRAIN_IDLE_POLLS`` consecutive polls. (A
     drained Python source stops producing batches entirely — the offset
     stops advancing so no further micro-batch EXECUTES, and Spark's
     throttled no-data progress events reuse the last executed batchId —
@@ -317,7 +318,7 @@ def run_to_memory_drain(
                     and not st["isTriggerActive"]
                 ):
                     idle += 1
-                    if idle >= idle_triggers:
+                    if idle >= DRAIN_IDLE_POLLS:
                         drained = True
                         break
                 else:
@@ -576,31 +577,6 @@ def dedup_within_watermark(ev: DataFrame) -> DataFrame:
 ORACLE_DEDUP_WITHIN_WATERMARK = """
 SELECT DISTINCT user_id, event_type, strftime(ts, '%Y-%m-%d') AS d FROM events
 """
-
-
-def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window sessionization on the incremental engine —
-    the stateful MERGING window operator (unlike tumbling windows, open
-    sessions merge when a bridging event arrives), exercised in complete
-    mode so every final merged session is emitted and the batch
-    sessionization oracle applies verbatim. Production would run
-    append + watermark to bound state; complete over availableNow is the
-    deterministic finite-input form of the same state machine."""
-    from flink_gmall_spark.plans.dws import SESSION_GAP_SECONDS
-
-    ev = read_stream(spark, sf_dir, "events")
-    w = F.session_window("ts", f"{SESSION_GAP_SECONDS} seconds")
-    agg = (
-        ev.groupBy(w.alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-        )
-    )
-    return run_to_memory(agg, "complete")
 
 
 WM_DELAY_S = 60  # watermark delay for the append-mode windowed entry
@@ -1237,14 +1213,9 @@ def stream_ads_hourly_from_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum over 10 s windows), not a cross-window distinct. The oracle
     composes the append-mode watermark-boundary rule with that rollup,
     so the hash checks the full producer→sink→consumer chain."""
-    import hashlib as _hashlib
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
-    from flink_gmall_spark.scratch import scratch_dir
-
-    tag = _hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = scratch_dir("ads_sink", tag)
+    out = scratch_dir("ads_sink", session_tag(spark, sf_dir))
     sink_dir = os.path.join(out, "visitor_stats")
     ckpt = os.path.join(out, "_ckpt")
 
@@ -1341,16 +1312,11 @@ def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is ORACLE_PQ_ADC_TOPK unchanged: if the store hop dropped,
     duplicated, or mangled one code row, ranks shift and the hash fails —
     the chain proof, same discipline as stream_ads_hourly_from_sink."""
-    import hashlib as _hashlib
-
     from flink_gmall_spark.operators.ann import _pq_codes, adc_topk_from_codes
-    from flink_gmall_spark.scratch import scratch_dir
+    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
-    tag = _hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = scratch_dir("pq_index", tag)
+    out = scratch_dir("pq_index", session_tag(spark, sf_dir))
     sink_dir = os.path.join(out, "codes")
     ckpt = os.path.join(out, "_ckpt")
 
@@ -1476,9 +1442,6 @@ def stream_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZC_CALLS = itertools.count()  # per-call nonce (compaction discipline)
-
-
 def zorder_stream_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Producer + maintenance halves of stream_zorder_compaction (shared
     with the clustering-proof test): stream the split events table into
@@ -1487,11 +1450,8 @@ def zorder_stream_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     from flink_gmall_spark.operators.scale import zorder_cluster
     from flink_gmall_spark.scratch import scratch_dir
 
-    tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{spark.sparkContext.applicationId}"
-        f"|{next(_ZC_CALLS)}".encode()
-    ).hexdigest()[:12]
-    base = scratch_dir("zorder_stream", tag)
+    # per-call tag (the compaction discipline): no two calls share paths
+    base = scratch_dir("zorder_stream", uuid.uuid4().hex[:12])
     store = os.path.join(base, "store")
     ckpt = os.path.join(base, "_ckpt")
     clustered = os.path.join(base, "clustered")

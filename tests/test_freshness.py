@@ -1,45 +1,91 @@
-"""Machine-checked freshness invariant (VERDICT r12 ask #5).
+"""Machine-checked freshness invariant.
 
-The driver samples the first 50 registry entries per round; the builder
-rotates `_SAMPLE_PRIORITY` so every entry re-earns a green row within a
-bounded number of rounds, new entries get verified immediately, and
-expression-touched entries re-verify the same round. Through round 12
-this was comment discipline; these tests enforce it against the
-committed CORRECTNESS_r*.json ledger, with the window rule defined ONCE
-in tools/coverage_report.staged_window.
+The driver samples the first 50 registry entries per round. The
+registry derives that window at import from the committed
+CORRECTNESS_r*.json ledger (``registry.staged_window``), so every entry
+re-earns a green row within a bounded number of rounds, new entries get
+verified immediately, and entries declared in ``_REVERIFY_HEAD``
+re-verify the same round. These tests hold the first 50 registrations
+to the rule and the ledger to its rotation bound.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import shutil
+import subprocess
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _ledger():
-    from tools.coverage_report import last_green_rounds
+    from flink_gmall_spark.registry import last_green_rounds
 
     return last_green_rounds()
 
 
+def _window() -> list[str]:
+    from flink_gmall_spark.registry import WINDOW_SIZE, registry
+
+    return list(registry())[:WINDOW_SIZE]
+
+
 def test_sample_window_matches_staging_rule():
-    """_SAMPLE_PRIORITY must be exactly what the rule derives: new
-    entries + declared re-verifications + stalest fill. Hand-editing the
-    window without restaging (or forgetting to declare a changed-code
-    re-verification in _REVERIFY_HEAD) fails here."""
+    """The first 50 registrations - what the driver samples - are
+    exactly what the rule derives, in order: new entries + declared
+    re-verifications + stalest fill."""
     from flink_gmall_spark.registry import (
         _REGISTRATION_ORDER,
         _REVERIFY_HEAD,
-        _SAMPLE_PRIORITY,
+        staged_window,
     )
-    from tools.coverage_report import staged_window
 
     want = staged_window(_REGISTRATION_ORDER, _ledger(), _REVERIFY_HEAD)
-    assert len(_SAMPLE_PRIORITY) == len(want) == 50
-    # sets, not sequence: order within the window is presentation; the
-    # driver samples all 50 regardless
-    assert set(_SAMPLE_PRIORITY) == set(want), (
-        sorted(set(want) - set(_SAMPLE_PRIORITY)),
-        sorted(set(_SAMPLE_PRIORITY) - set(want)),
+    assert len(want) == 50
+    assert _window() == want
+
+
+def _import_order(cwd, pythonpath: str, module: str) -> dict:
+    """Import ``module`` in a fresh interpreter and report which
+    registry file it loaded, its registration order and registry() order."""
+    code = f"""
+import json
+import {module} as m
+from flink_gmall_spark import registry as r
+print(json.dumps({{"file": r.__file__, "reg": list(r._REGISTRATION_ORDER),
+                  "order": list(r.registry())}}))
+"""
+    env = {**os.environ, "PYTHONPATH": pythonpath}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=cwd, env=env, capture_output=True, text=True, check=True,
     )
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_window_independent_of_cwd_and_optional_ledger(tmp_path):
+    """The ledger is found beside the package, not in the cwd: the
+    driver imports ``__spark_entry__`` from another directory and must
+    see the same window. A package-only copy with no ledger beside it
+    (an installed copy) still imports and keeps registration order."""
+    from flink_gmall_spark.registry import _REGISTRATION_ORDER
+
+    got = _import_order(tmp_path, REPO, "__spark_entry__")
+    assert got["file"].startswith(REPO)
+    assert got["order"][:50] == _window()
+
+    site = tmp_path / "site"
+    shutil.copytree(
+        os.path.join(REPO, "flink_gmall_spark"),
+        site / "flink_gmall_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    bare = _import_order(tmp_path, str(site), "flink_gmall_spark.registry")
+    assert bare["file"].startswith(str(site))
+    assert bare["order"] == bare["reg"] == list(_REGISTRATION_ORDER)
 
 
 def test_every_entry_green_or_staged():
@@ -47,12 +93,11 @@ def test_every_entry_green_or_staged():
     without a green driver row in any CORRECTNESS_r*.json must be in
     the staged window (it is new) — otherwise it is silently
     unverified surface."""
-    from flink_gmall_spark.registry import _SAMPLE_PRIORITY, registry
+    from flink_gmall_spark.registry import registry
 
     last = _ledger()
-    orphans = [
-        n for n in registry() if n not in last and n not in _SAMPLE_PRIORITY
-    ]
+    window = _window()
+    orphans = [n for n in registry() if n not in last and n not in window]
     assert not orphans, orphans
 
 
@@ -61,16 +106,17 @@ def test_freshness_debt_bounded_outside_window():
     full rotation: with N entries and 50 slots a complete pass takes
     ceil(N/50) rounds, so anything older than max_round − (ceil(N/50)+1)
     outside the window means the rotation skipped it."""
-    from flink_gmall_spark.registry import _SAMPLE_PRIORITY, registry
+    from flink_gmall_spark.registry import registry
 
     last = _ledger()
+    window = _window()
     max_round = max(last.values())
     lag = math.ceil(len(registry()) / 50) + 1
     stale = [
         (n, last[n])
         for n in registry()
         if n in last
-        and n not in _SAMPLE_PRIORITY
+        and n not in window
         and last[n] < max_round - lag
     ]
     assert not stale, stale

@@ -50,3 +50,24 @@ def test_same_tag_reuses_path(monkeypatch, tmp_path):
     a = scratch.scratch_dir("wh", "k")
     b = scratch.scratch_dir("wh", "k")
     assert a == b and os.path.isdir(a)
+
+
+def test_session_tag_stable_per_session_distinct_per_input(tmp_path):
+    from types import SimpleNamespace
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    a, b = tmp_path / "sf_a", tmp_path / "sf_b"
+    a.mkdir()
+    b.mkdir()
+    (tmp_path / "link_a").symlink_to(a)
+    s1, s2 = session("local-1"), session("local-2")
+    tag = scratch.session_tag(s1, str(a))
+    assert len(tag) == 12 and int(tag, 16) >= 0
+    # stable within a session, also through a symlinked path to the input
+    assert scratch.session_tag(s1, str(a)) == tag
+    assert scratch.session_tag(s1, str(tmp_path / "link_a")) == tag
+    # distinct across inputs and across sessions
+    assert scratch.session_tag(s1, str(b)) != tag
+    assert scratch.session_tag(s2, str(a)) != tag

@@ -9,64 +9,14 @@ Run: python tools/coverage_report.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 from collections import defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from flink_gmall_spark.registry import registry
-
-WINDOW_SIZE = 50  # entries the driver samples per round
-
-
-def last_green_rounds() -> dict[str, int]:
-    """Per-entry last GREEN driver round, parsed from the committed
-    CORRECTNESS_r*.json files (VERDICT r12 ask #5: the freshness ledger
-    must be machine-readable, not comment discipline). Green = no error,
-    row counts match, and neither schema nor hash recorded a mismatch
-    (rows-only entries omit the hash field - absent is not a failure)."""
-    last: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        try:
-            rows = json.load(open(f))
-        except Exception:
-            continue
-        for name, v in rows.items():
-            green = (
-                not v.get("err")
-                and v.get("rows_match")
-                and v.get("schema_match") is not False
-                and v.get("hash_match") is not False
-            )
-            if green:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def staged_window(
-    reg_order, last: dict[str, int], reverify, n: int = WINDOW_SIZE
-) -> list[str]:
-    """THE window rule (single definition - registry staging and
-    tests/test_freshness.py both check against this): never-green
-    entries first (new additions), then the declared changed-code
-    re-verifications, then the stalest remainder by (last-green round,
-    registration order) up to n."""
-    new = [e for e in reg_order if e not in last]
-    head = new + [e for e in reverify if e not in new]
-    assert len(head) <= n, (
-        f"{len(head)} new+reverify entries exceed the {n}-slot window; "
-        "land them across rounds or the driver will never sample some"
-    )
-    idx = {e: i for i, e in enumerate(reg_order)}
-    rest = [e for e in reg_order if e in last and e not in head]
-    fill = sorted(rest, key=lambda e: (last[e], idx[e]))[: n - len(head)]
-    return head + fill
+from flink_gmall_spark.registry import WINDOW_SIZE, last_green_rounds, registry
 
 # SURVEY §2 inventory IDs in order, with one-line glosses.
 SURVEY_IDS = [
@@ -194,7 +144,7 @@ def main() -> None:
             f"| {label} | {len(names)} | " + ", ".join(f"`{e}`" for e in names) + " |"
         )
 
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "COVERAGE.md")
+    out = os.path.join(REPO, "COVERAGE.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}")

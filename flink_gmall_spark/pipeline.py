@@ -22,6 +22,7 @@ mapping.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,8 +111,12 @@ def pipeline_e2e_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed per session: repeated runs in one session (bench runs
     # everything twice) REUSE one dir via overwrite writes, and the
     # scratch registry removes it at exit — previously a fresh uuid dir
-    # per call accumulated without bound.
+    # per call accumulated without bound. The DWS checkpoint is the one
+    # thing not overwritten: left committed, it would turn the next
+    # call's stream hop into a no-op over the old stats, so every call
+    # starts from none.
     out = scratch_dir("wh", session_tag(spark, sf_dir))
+    shutil.rmtree(os.path.join(out, "_ckpt_visitor_stats"), ignore_errors=True)
     tables = build_warehouse(spark, sf_dir, out)
     return ads_hourly_from_stats(spark, tables["visitor_stats"])
 

@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_gmall_spark.sources.tables import normalize_timestamps
+from flink_gmall_spark.sources.tables import normalize_timestamps, parquet_schema
 from flink_gmall_spark.sources.tables import path as table_path
 
 from pyspark.sql import types as T
@@ -163,16 +163,15 @@ def read_stream(
     spark: SparkSession, sf_dir: str, name: str, split: bool = False
 ) -> DataFrame:
     """File-source stream with the batch-inferred schema (no inference on
-    the stream path), normalized through the same timestamp chokepoint as
+    the stream path; ``parquet_schema`` infers it once per session and
+    file version), normalized through the same timestamp chokepoint as
     the batch reader (NTZ→TIMESTAMP cast, legacy nanos→micros).
 
     ``split=True`` stages the table as two day-boundary-cut files and
     caps the trigger at one file, so an availableNow run becomes ≥2
     genuine micro-batches — used by every keyed-state entry so driver
     correctness rows prove cross-batch state continuity."""
-    p = table_path(sf_dir, name)
-    schema = spark.read.parquet(p).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, table_path(sf_dir, name)))
     if split:
         src_dir = _stream_dir_split(sf_dir, name)
         reader = reader.option("maxFilesPerTrigger", "1")

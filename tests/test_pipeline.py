@@ -3,16 +3,14 @@ the materialized stats — results must equal direct computation."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from flink_gmall_spark import pipeline
 from flink_gmall_spark.plans import dws
 
 
-def test_build_warehouse_and_query(spark, sf_dir):
-    out = tempfile.mkdtemp(prefix="fgs_wh_")
+def test_build_warehouse_and_query(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "wh")
     tables = pipeline.build_warehouse(spark, sf_dir, out)
     assert set(tables) == {
         "dwd_page_log",
@@ -52,3 +50,38 @@ def test_build_warehouse_and_query(spark, sf_dir):
     # dim upsert materialized exactly one row per order id
     dim = spark.read.parquet(tables["dim_order_info"])
     assert dim.count() == dim.select("id").distinct().count()
+
+
+def test_pipeline_e2e_hourly_streams_on_every_call(spark, sf_dir):
+    """A second call in one session reuses the per-session scratch dir;
+    it must run the streaming hop again, not re-read the first call's
+    stats through an already-committed checkpoint."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    input_rows: list[int] = []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            input_rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        first = sorted(map(tuple, pipeline.pipeline_e2e_hourly(spark, sf_dir).collect()))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        input_rows.clear()
+        second = sorted(map(tuple, pipeline.pipeline_e2e_hourly(spark, sf_dir).collect()))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert any(n > 0 for n in input_rows), input_rows
+    assert first and second == first

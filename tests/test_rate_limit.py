@@ -8,9 +8,7 @@ see _CDCEnvelopeDistStreamReader.latestOffset for the write-up)."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
-import uuid
 
 import pandas as pd
 import pyarrow as pa
@@ -76,9 +74,8 @@ def _drain_until(sink: dict[int, int], target: int, q, timeout_s: float = 120.0)
     q.awaitTermination()
 
 
-def test_rate_limited_replay_bounded_batches(spark):
-    base = os.path.join(tempfile.gettempdir(), "fgs_rate", uuid.uuid4().hex[:8])
-    os.makedirs(base)
+def test_rate_limited_replay_bounded_batches(spark, tmp_path):
+    base = str(tmp_path)
     src, n_rg, expected = _make_backlog(base)
     assert n_rg == 4
     rows: dict[int, int] = {}
@@ -89,14 +86,13 @@ def test_rate_limited_replay_bounded_batches(spark):
     assert len(nonempty) == n_rg, (rows, n_rg)  # one row group per batch
 
 
-def test_rate_limited_replay_survives_restart(spark):
+def test_rate_limited_replay_survives_restart(spark, tmp_path):
     """Stop mid-backlog and restart from the checkpoint: epoch-deduped
     delivered rows must equal the backlog exactly (the failure mode this
     pins is duplicate re-reads from a reset rate-limit cursor; the
     epoch-keyed sink already absorbs the one legitimate foreachBatch
     replay of an uncommitted epoch)."""
-    base = os.path.join(tempfile.gettempdir(), "fgs_rate", uuid.uuid4().hex[:8])
-    os.makedirs(base)
+    base = str(tmp_path)
     # 16 row groups (vs the other test's 4): with a 0.3 s poll the backlog
     # must NOT be fully drainable between "reached half" and q.stop(), or
     # the restart phase has nothing to restart into (ADVICE r4).
@@ -118,7 +114,7 @@ def test_rate_limited_replay_survives_restart(spark):
     assert sum(epochs.values()) == expected, epochs
 
 
-def test_with_deletes_streams_op_phase_waves(spark):
+def test_with_deletes_streams_op_phase_waves(spark, tmp_path):
     """withDeletes re-keys the offset space to op-phase waves (insert →
     update → delete, one wave per row group), so a key's insert and its
     later delete genuinely straddle micro-batches — the delivery shape
@@ -126,8 +122,7 @@ def test_with_deletes_streams_op_phase_waves(spark):
     against (VERDICT r8 ask #4). Pins: exact per-type totals, one
     non-empty batch per (phase, row group) unit under the 1-unit cap,
     and strict phase ordering across epochs."""
-    base = os.path.join(tempfile.gettempdir(), "fgs_rate", uuid.uuid4().hex[:8])
-    os.makedirs(base)
+    base = str(tmp_path)
     src, n_rg, _ = _make_backlog(base)  # n=40: 14 'F' updates, 6 %7 deletes
     spark.dataSource.register(GmallCDCStreamDataSource)
     env = (
@@ -182,7 +177,7 @@ def test_with_deletes_streams_op_phase_waves(spark):
     assert len(seq) == 3 * n_rg, by_epoch  # one batch per (phase, rg)
 
 
-def test_run_to_memory_drain_no_target_uses_engine_drain_signal(spark):
+def test_run_to_memory_drain_no_target_uses_engine_drain_signal(spark, tmp_path):
     """The no-target fallback: a drained finite Python source stops
     producing batches entirely (unchanged offset -> no trigger) and
     Spark's throttled no-data progress events REUSE the last executed
@@ -192,8 +187,7 @@ def test_run_to_memory_drain_no_target_uses_engine_drain_signal(spark):
     on every drained backlog."""
     from flink_gmall_spark.streaming.jobs import run_to_memory_drain
 
-    base = os.path.join(tempfile.gettempdir(), "fgs_rate", uuid.uuid4().hex[:8])
-    os.makedirs(base)
+    base = str(tmp_path)
     src, _, expected = _make_backlog(base)
     spark.dataSource.register(GmallCDCStreamDataSource)
     env = (
@@ -209,13 +203,12 @@ def test_run_to_memory_drain_no_target_uses_engine_drain_signal(spark):
     assert time.time() - t0 < 60.0
 
 
-def test_run_to_memory_drain_unmet_target_raises(spark):
+def test_run_to_memory_drain_unmet_target_raises(spark, tmp_path):
     """A timeout must surface as a named drain failure, not a silently
     partial memory table feeding a downstream oracle hash mismatch."""
     from flink_gmall_spark.streaming.jobs import run_to_memory_drain
 
-    base = os.path.join(tempfile.gettempdir(), "fgs_rate", uuid.uuid4().hex[:8])
-    os.makedirs(base)
+    base = str(tmp_path)
     src, _, expected = _make_backlog(base)
     spark.dataSource.register(GmallCDCStreamDataSource)
     env = (

@@ -6,8 +6,6 @@ FsStateBackend recovery story, SURVEY §2.6 T8/T9)."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -28,10 +26,10 @@ def test_frozen_clock(spark):
     assert live.ts > 1_600_000_000_000
 
 
-def test_stateful_restart_resumes_from_checkpoint(spark, sf_dir):
-    src_dir = tempfile.mkdtemp(prefix="fgs_rec_src_")
-    out_dir = tempfile.mkdtemp(prefix="fgs_rec_out_")
-    ckpt = tempfile.mkdtemp(prefix="fgs_rec_ckpt_")
+def test_stateful_restart_resumes_from_checkpoint(spark, sf_dir, tmp_path):
+    src_dir = str(tmp_path / "src")
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", F.date_format("ts", "yyyy-MM-dd").alias("dt")
@@ -80,5 +78,3 @@ def test_stateful_restart_resumes_from_checkpoint(spark, sf_dir):
     assert got.count() == want.count()
     assert got.distinct().count() == want.count()
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    shutil.rmtree(src_dir)

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -11,11 +10,11 @@ from flink_gmall_spark.sources import kafka as kafka_io
 from flink_gmall_spark.streaming import jobs
 
 
-def test_exactly_once_epoch_sink_is_idempotent(spark, sf_dir):
+def test_exactly_once_epoch_sink_is_idempotent(spark, sf_dir, tmp_path):
     """Replaying the same stream over the same checkpoint must not
     duplicate rows (T9/S6: the reference's EXACTLY_ONCE Kafka txn analog)."""
-    out = tempfile.mkdtemp(prefix="fgs_eos_out_")
-    ckpt = tempfile.mkdtemp(prefix="fgs_eos_ckpt_")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
     src = jobs.read_stream(spark, sf_dir, "events").select("event_id", "user_id")
 
     q = jobs.write_exactly_once(src, out, ckpt)
@@ -37,20 +36,18 @@ def test_kafka_requires_integration(spark):
         kafka_io.read_stream(spark, "ods_base_log")
 
 
-def test_pyds_sink_abort_leaves_no_manifest(spark, sf_dir):
+def test_pyds_sink_abort_leaves_no_manifest(spark, sf_dir, tmp_path):
     """Two-phase commit, failure leg: when a task fails mid-write the
     driver must call abort and publish NO manifest — readers that trust
     only the manifest (sink_pyds_dim_roundtrip) therefore never observe a
     partial write. A poisoned UDF fails one partition after others may
     have staged files."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from flink_gmall_spark.sources.pydatasource import GmallDimSinkDataSource
 
     spark.dataSource.register(GmallDimSinkDataSource)
-    d = os.path.join(tempfile.gettempdir(), "fgs_sink_abort", uuid.uuid4().hex[:8])
+    d = str(tmp_path / "sink")
 
     @F.udf("long")
     def poison(v):
@@ -64,19 +61,16 @@ def test_pyds_sink_abort_leaves_no_manifest(spark, sf_dir):
     assert not os.path.exists(os.path.join(d, "_MANIFEST.json"))
 
 
-def test_pyds_stream_source_checkpoint_replay(spark, sf_dir):
+def test_pyds_stream_source_checkpoint_replay(spark, sf_dir, tmp_path):
     """The custom streaming source must honor checkpointed offsets: a
     second availableNow run over the same checkpoint sees the committed
     row-group offset and reads zero new rows — the source half of
     exactly-once (the sink half is the epoch/manifest tests above)."""
-    import uuid
-
     from flink_gmall_spark.sources.pydatasource import GmallCDCStreamDataSource
     from flink_gmall_spark.sources.tables import path as table_path
 
     spark.dataSource.register(GmallCDCStreamDataSource)
-    base = os.path.join(tempfile.gettempdir(), "fgs_ckpt_src", uuid.uuid4().hex[:8])
-    ckpt = os.path.join(base, "ckpt")
+    ckpt = str(tmp_path / "ckpt")
 
     def run_once() -> int:
         env = (

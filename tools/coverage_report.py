@@ -122,7 +122,7 @@ def main() -> None:
         f"Parsed from CORRECTNESS_r01..r{max_round:02d}. Round 0 = never",
         "driver-verified (new additions, staged to lead the next window).",
         "The driver samples the first 50 registrations each round; the",
-        "window is machine-derived (tools/coverage_report.staged_window):",
+        "window is machine-derived (flink_gmall_spark/registry.staged_window):",
         "never-green + declared re-verifications + stalest by (last green",
         "round, registration order).",
         "",

@@ -13,11 +13,13 @@ never tune.
 Registration ORDER matters operationally: the external driver samples the
 first 50 registrations for its per-round correctness run. At import the
 bottom of this module moves the sample window to the front: it is derived
-by ``staged_window`` from the committed ``CORRECTNESS_r*.json`` ledger
-beside the package, plus the hand-declared ``_REVERIFY_HEAD``. Without a
-ledger (an installed copy) registration order stands. The blocks below
-keep their historical grouping. Local parity (tests/test_parity.py)
-always runs every entry regardless of order.
+by ``staged_window`` from two committed files beside the package, the
+``CORRECTNESS_r*.json`` ledger and ``PLAN_FINGERPRINTS.json``, whose
+per-entry plan rounds name the entries to re-verify. Nothing in it is
+declared by hand. Without those files (an installed copy) registration
+order stands. The blocks below keep their historical grouping. Local
+parity (tests/test_parity.py) always runs every entry regardless of
+order, and checks each entry's plan fingerprint.
 """
 
 from __future__ import annotations
@@ -480,22 +482,26 @@ _register("stream_unigram_encode", stream_jobs.stream_unigram_encode, curation.O
 # =============================================================================
 # Sample window. The driver samples the FIRST 50 registrations per round,
 # so registration order is evidence strategy. The window is derived here,
-# at import, from the committed CORRECTNESS_r*.json ledger: never-green
-# entries (new additions) first, then _REVERIFY_HEAD, then the stalest
+# at import, from committed files: never-green entries (new additions)
+# first, then the re-verify list - entries whose plan fingerprint round
+# (PLAN_FINGERPRINTS.json, written by tools/plan_fingerprint.py) is newer
+# than their last green CORRECTNESS_r*.json row - then the stalest
 # remainder by (last-green round, registration order). Landing a new
-# ledger file rotates the window by itself; tools/coverage_report.py
-# prints the per-entry ledger into COVERAGE.md and
-# tests/test_freshness.py checks the first 50 registrations against it.
+# ledger file rotates the window, and a regenerated fingerprint stages
+# its entry, with no hand-kept list; tools/coverage_report.py prints the
+# per-entry ledger into COVERAGE.md and tests/test_freshness.py checks
+# the first 50 registrations against the rule.
 # =============================================================================
 
 WINDOW_SIZE = 50  # entries the driver samples per round
 
-# The ledger sits at the repo root, beside the package - found by the
-# module's location, never the cwd (the driver imports from elsewhere).
-# An installed copy ships without it and keeps registration order.
-_LEDGER_GLOB = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CORRECTNESS_r*.json"
-)
+# The ledger and the fingerprints sit at the repo root, beside the
+# package - found by the module's location, never the cwd (the driver
+# imports from elsewhere). An installed copy ships without them and keeps
+# registration order.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_LEDGER_GLOB = os.path.join(_ROOT, "CORRECTNESS_r*.json")
+_FINGERPRINTS = os.path.join(_ROOT, "PLAN_FINGERPRINTS.json")
 
 
 def last_green_rounds() -> dict[str, int]:
@@ -523,11 +529,22 @@ def last_green_rounds() -> dict[str, int]:
     return last
 
 
+def plan_rounds() -> dict[str, int]:
+    """Per-entry driver round from which its committed plan fingerprint
+    stands (``PLAN_FINGERPRINTS.json``: name -> [md5, round]); a round
+    newer than the entry's last green row means its plan changed since."""
+    try:
+        with open(_FINGERPRINTS) as fh:
+            return {name: rnd for name, (_, rnd) in json.load(fh).items()}
+    except (OSError, ValueError):  # no fingerprints beside the package
+        return {}
+
+
 def staged_window(
     reg_order, last: dict[str, int], reverify, n: int = WINDOW_SIZE
 ) -> list[str]:
     """THE window rule: never-green entries first (new additions), then
-    the declared changed-code re-verifications, then the stalest
+    the changed-plan re-verifications, then the stalest
     remainder by (last-green round, registration order) up to n."""
     new = [e for e in reg_order if e not in last]
     head = new + [e for e in reverify if e not in new]
@@ -545,16 +562,12 @@ def staged_window(
 # tie-break among equally-stale entries, stable across rounds.
 _REGISTRATION_ORDER = tuple(_REGISTRY)
 
-# Entries whose expressions changed AFTER their last green driver row
-# (same-round re-verification) - the one part of the window declared by
-# hand. A stale entry here costs a window slot, nothing more.
-# Round 17: cleared — all 12 r16 entries greened in CORRECTNESS_r16;
-# moving 24 stream twins onto twin() left their plans unchanged.
-_REVERIFY_HEAD: tuple[str, ...] = ()
-
-_last_green = last_green_rounds()
-if _last_green:  # no ledger beside the package: registration order stands
-    _window = staged_window(_REGISTRATION_ORDER, _last_green, _REVERIFY_HEAD)
+_last_green, _plan_rounds = last_green_rounds(), plan_rounds()
+if _last_green and _plan_rounds:  # none beside the package: registration order
+    # re-verify: entries green before whose plan changed after their last green row
+    _reverify = [e for e in _REGISTRATION_ORDER
+                 if e in _last_green and _plan_rounds.get(e, 0) > _last_green[e]]
+    _window = staged_window(_REGISTRATION_ORDER, _last_green, _reverify)
     _REGISTRY = {n: _REGISTRY[n] for n in (*_window, *_REGISTRATION_ORDER)}
 
 

@@ -16,30 +16,31 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_gmall_spark.scratch import scratch_dir, session_tag
 from flink_gmall_spark.sources.tables import normalize_timestamps, parquet_schema
 from flink_gmall_spark.sources.tables import path as table_path
 
 from pyspark.sql import types as T
 
 
-def _stream_dir(sf_dir: str, name: str) -> str:
+def _stream_dir(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Spark's file stream source wants a *directory*; the testdata packs
-    every table into one. Stage a stable per-table symlink dir in tmp."""
+    every table into one. Stage a per-table symlink dir in this session's
+    scratch dir (keyed by ``session_tag``): it is removed when the process
+    exits and never shared with a concurrent session still reading it."""
     src = table_path(sf_dir, name)
-    tag = hashlib.md5(src.encode()).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"fgs_stream_{name}_{tag}")
+    d = os.path.join(scratch_dir("stream", session_tag(spark, sf_dir)), name)
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, f"{name}.parquet")
     # Atomic staging: symlink to a unique name, then rename into place.
     # A bare exists-check + symlink is a TOCTOU race between concurrent
-    # sessions, and a stale link (testdata regenerated) must be replaced.
+    # readers, and a stale link (testdata regenerated) must be replaced.
     if os.path.realpath(link) != os.path.realpath(src):
         tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
         os.symlink(src, tmp)
@@ -105,7 +106,7 @@ def write_ordered_parts(d: str, tables, base_mtime: float) -> None:
         os.utime(p, (base_mtime + i, base_mtime + i))
 
 
-def _stream_dir_split(sf_dir: str, name: str) -> str:
+def _stream_dir_split(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Stage a table as TWO parquet files cut at the shared day boundary
     (earlier days in part-0, the rest in part-1, original row order
     preserved within each) so availableNow + maxFilesPerTrigger=1 drives
@@ -131,7 +132,7 @@ def _stream_dir_split(sf_dir: str, name: str) -> str:
     tag = hashlib.md5(
         f"{os.path.realpath(src)}|{st.st_mtime_ns}|{st.st_size}|{boundary}|v2".encode()
     ).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"fgs_split_{name}_{tag}")
+    d = os.path.join(scratch_dir("stream", session_tag(spark, sf_dir)), f"{name}_split_{tag}")
     done = os.path.join(d, "_STAGED")
     if os.path.exists(done):
         return d
@@ -173,10 +174,10 @@ def read_stream(
     correctness rows prove cross-batch state continuity."""
     reader = spark.readStream.schema(parquet_schema(spark, table_path(sf_dir, name)))
     if split:
-        src_dir = _stream_dir_split(sf_dir, name)
+        src_dir = _stream_dir_split(spark, sf_dir, name)
         reader = reader.option("maxFilesPerTrigger", "1")
     else:
-        src_dir = _stream_dir(sf_dir, name)
+        src_dir = _stream_dir(spark, sf_dir, name)
     df = reader.parquet(src_dir)
     return normalize_timestamps(df)
 
@@ -198,8 +199,6 @@ def run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
     construction."""
     spark = result.sparkSession
     if output_mode == "append":
-        from flink_gmall_spark.scratch import scratch_dir
-
         path = scratch_dir("stream_drain", uuid.uuid4().hex[:12])
         out = os.path.join(path, "rows")
         q = (
@@ -1212,7 +1211,6 @@ def stream_ads_hourly_from_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum over 10 s windows), not a cross-window distinct. The oracle
     composes the append-mode watermark-boundary rule with that rollup,
     so the hash checks the full producer→sink→consumer chain."""
-    from flink_gmall_spark.scratch import scratch_dir, session_tag
 
     out = scratch_dir("ads_sink", session_tag(spark, sf_dir))
     sink_dir = os.path.join(out, "visitor_stats")
@@ -1312,7 +1310,6 @@ def stream_pq_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated, or mangled one code row, ranks shift and the hash fails —
     the chain proof, same discipline as stream_ads_hourly_from_sink."""
     from flink_gmall_spark.operators.ann import _pq_codes, adc_topk_from_codes
-    from flink_gmall_spark.scratch import scratch_dir, session_tag
     from flink_gmall_spark.sources import load
 
     out = scratch_dir("pq_index", session_tag(spark, sf_dir))
@@ -1447,7 +1444,6 @@ def zorder_stream_rewrite(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the epoch-partitioned exactly-once store, then rewrite ``epoch=*``
     into the Morton-clustered layout. Returns (store, clustered)."""
     from flink_gmall_spark.operators.scale import zorder_cluster
-    from flink_gmall_spark.scratch import scratch_dir
 
     # per-call tag (the compaction discipline): no two calls share paths
     base = scratch_dir("zorder_stream", uuid.uuid4().hex[:12])

@@ -2,11 +2,13 @@
 
 The driver samples the first 50 registry entries per round. The
 registry derives that window at import from the committed
-CORRECTNESS_r*.json ledger (``registry.staged_window``), so every entry
-re-earns a green row within a bounded number of rounds, new entries get
-verified immediately, and entries declared in ``_REVERIFY_HEAD``
-re-verify the same round. These tests hold the first 50 registrations
-to the rule and the ledger to its rotation bound.
+CORRECTNESS_r*.json ledger and PLAN_FINGERPRINTS.json
+(``registry.staged_window``), so every entry re-earns a green row
+within a bounded number of rounds, new entries get verified
+immediately, and entries whose plan fingerprint changed after their
+last green row re-verify the next round. These tests hold the first
+50 registrations to the rule, the fingerprint file to the registry and
+the ledger to its rotation bound; none of them starts Spark.
 """
 
 from __future__ import annotations
@@ -35,17 +37,42 @@ def _window() -> list[str]:
 
 def test_sample_window_matches_staging_rule():
     """The first 50 registrations - what the driver samples - are
-    exactly what the rule derives, in order: new entries + declared
+    exactly what the rule derives, in order: new entries + changed-plan
     re-verifications + stalest fill."""
-    from flink_gmall_spark.registry import (
-        _REGISTRATION_ORDER,
-        _REVERIFY_HEAD,
-        staged_window,
-    )
+    from flink_gmall_spark.registry import _REGISTRATION_ORDER, staged_window
 
-    want = staged_window(_REGISTRATION_ORDER, _ledger(), _REVERIFY_HEAD)
+    last = _ledger()
+    plan = {n: rnd for n, (_, rnd) in _fingerprints().items()}
+    # re-verify: green before, fingerprint round newer than the last green row
+    reverify = [n for n in _REGISTRATION_ORDER if n in last and plan[n] > last[n]]
+    want = staged_window(_REGISTRATION_ORDER, last, reverify)
     assert len(want) == 50
     assert _window() == want
+
+
+def _fingerprints() -> dict:
+    with open(os.path.join(REPO, "PLAN_FINGERPRINTS.json")) as fh:
+        return json.load(fh)
+
+
+def test_every_entry_fingerprinted():
+    """PLAN_FINGERPRINTS.json names exactly the registry's entries: a
+    new entry without a fingerprint fails here, before any Spark test."""
+    from flink_gmall_spark.registry import registry
+
+    assert sorted(_fingerprints()) == sorted(registry())
+
+
+def test_fingerprint_rounds_not_ahead_of_ledger():
+    """A fingerprint round is the round its md5 first appeared; a changed
+    md5 is stamped with the newest ledger round + 1, never later."""
+    newest = max(
+        int(f[len("CORRECTNESS_r"):-len(".json")])
+        for f in os.listdir(REPO)
+        if f.startswith("CORRECTNESS_r") and f.endswith(".json")
+    )
+    ahead = {n: r for n, (_, r) in _fingerprints().items() if r > newest + 1}
+    assert not ahead, ahead
 
 
 def _import_order(cwd, pythonpath: str, module: str) -> dict:

@@ -4,6 +4,7 @@ exit and stale orphans from dead sessions must get swept — the
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -71,3 +72,32 @@ def test_session_tag_stable_per_session_distinct_per_input(tmp_path):
     # distinct across inputs and across sessions
     assert scratch.session_tag(s1, str(b)) != tag
     assert scratch.session_tag(s2, str(a)) != tag
+
+
+def test_stream_staging_removed_at_interpreter_exit(tmp_path, sf_dir):
+    """read_stream stages its file-source dirs (symlink and two-part
+    split) under the session's scratch dir: once the process exits,
+    nothing it staged is left in the tempdir."""
+    code = """
+import glob, json, os, tempfile
+from flink_gmall_spark.session import get_spark
+from flink_gmall_spark.streaming.jobs import read_stream
+spark = get_spark("stream-staging", cpus="1")
+read_stream(spark, {sf!r}, "events")
+read_stream(spark, {sf!r}, "events", split=True)
+tmp = tempfile.gettempdir()
+print(json.dumps(glob.glob(os.path.join(tmp, "fgs_*"))
+                 + glob.glob(os.path.join(tmp, "fgs_scratch", "*", "*"))))
+spark.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": repo}
+    out = subprocess.run(
+        [sys.executable, "-c", code.format(sf=sf_dir)],
+        env=env, capture_output=True, text=True, check=True,
+    )
+    staged = json.loads(out.stdout.strip().splitlines()[-1])
+    assert staged  # the child did stage something
+    left = [str(p) for p in tmp_path.glob("fgs_*") if p.name != "fgs_scratch"]
+    left += [str(p) for p in tmp_path.glob("fgs_scratch/*/*")]
+    assert not left, left

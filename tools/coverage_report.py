@@ -123,7 +123,7 @@ def main() -> None:
         "driver-verified (new additions, staged to lead the next window).",
         "The driver samples the first 50 registrations each round; the",
         "window is machine-derived (flink_gmall_spark/registry.staged_window):",
-        "never-green + declared re-verifications + stalest by (last green",
+        "never-green + changed-plan re-verifications + stalest by (last green",
         "round, registration order).",
         "",
         f"**Depth-over-breadth policy (round 15+):** at {len(reg)} entries",

@@ -20,6 +20,8 @@ import shutil
 import subprocess
 import sys
 
+from tools.plan_fingerprint import committed, next_round
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -42,7 +44,7 @@ def test_sample_window_matches_staging_rule():
     from flink_gmall_spark.registry import _REGISTRATION_ORDER, staged_window
 
     last = _ledger()
-    plan = {n: rnd for n, (_, rnd) in _fingerprints().items()}
+    plan = {n: rnd for n, (_, rnd) in committed().items()}
     # re-verify: green before, fingerprint round newer than the last green row
     reverify = [n for n in _REGISTRATION_ORDER if n in last and plan[n] > last[n]]
     want = staged_window(_REGISTRATION_ORDER, last, reverify)
@@ -50,28 +52,18 @@ def test_sample_window_matches_staging_rule():
     assert _window() == want
 
 
-def _fingerprints() -> dict:
-    with open(os.path.join(REPO, "PLAN_FINGERPRINTS.json")) as fh:
-        return json.load(fh)
-
-
 def test_every_entry_fingerprinted():
     """PLAN_FINGERPRINTS.json names exactly the registry's entries: a
     new entry without a fingerprint fails here, before any Spark test."""
     from flink_gmall_spark.registry import registry
 
-    assert sorted(_fingerprints()) == sorted(registry())
+    assert sorted(committed()) == sorted(registry())
 
 
 def test_fingerprint_rounds_not_ahead_of_ledger():
     """A fingerprint round is the round its md5 first appeared; a changed
     md5 is stamped with the newest ledger round + 1, never later."""
-    newest = max(
-        int(f[len("CORRECTNESS_r"):-len(".json")])
-        for f in os.listdir(REPO)
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json")
-    )
-    ahead = {n: r for n, (_, r) in _fingerprints().items() if r > newest + 1}
+    ahead = {n: r for n, (_, r) in committed().items() if r > next_round()}
     assert not ahead, ahead
 
 

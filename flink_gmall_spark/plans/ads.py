@@ -1999,7 +1999,7 @@ def _pr_round(pr: DataFrame, und: DataFrame) -> DataFrame:
     )
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
+def release_local_checkpoint(df: DataFrame) -> None:
     """Free an INTERMEDIATE localCheckpoint's storage once its child has
     materialized — the iterative-loop hygiene that keeps 10 rounds from
     holding 10 ephemeral copies of the rank vector (guide §5: unpersist
@@ -2105,7 +2105,7 @@ def part_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree every round: measured rounds 0.55 s → 1.5 s growing at sf0.1,
     flat ~0.27 s after) and the parent vector's checkpoint storage is
     released as soon as its child materializes
-    (_release_local_checkpoint — the k-means/BPE loop discipline,
+    (release_local_checkpoint — the k-means/BPE loop discipline,
     guide §5). Plan size stays CONSTANT per round (plan-gated in
     tests/test_plans.py); the final 20-row top-N is eagerly
     localCheckpoint-ed so every round vector can be dropped before
@@ -2129,7 +2129,7 @@ def part_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     for _ in range(PR_ROUNDS_DEEP):
         nxt = _pr_round(pr, und).localCheckpoint(eager=True)
-        _release_local_checkpoint(pr)
+        release_local_checkpoint(pr)
         pr = nxt
     # 20-row result, eagerly materialized so releasing the final vector
     # cannot trigger a recompute later
@@ -2139,7 +2139,7 @@ def part_pagerank_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PR_TOP_N)
         .localCheckpoint(eager=True)
     )
-    _release_local_checkpoint(pr)
+    release_local_checkpoint(pr)
     return out
 
 

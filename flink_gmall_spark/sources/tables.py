@@ -32,6 +32,15 @@ def path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def file_identity(p: str) -> tuple[str, int, int]:
+    """``(realpath, st_mtime_ns, st_size)`` of a table: what memos keyed
+    on a table's content use, since a path's content can change while a
+    session lives (a fixture rewritten in place, input re-staged at a
+    reused path)."""
+    st = os.stat(p)
+    return os.path.realpath(p), st.st_mtime_ns, st.st_size
+
+
 # Session confs whose values change what parquet schema inference returns.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -53,21 +62,18 @@ def parquet_schema(spark: SparkSession, p: str) -> T.StructType:
     Inference runs one Spark job that reads a parquet footer, and a
     dashboard refresh or a warehouse build loads the same few tables
     over and over; with the schema given, a load runs no job at all.
-    The memo key is the session's ``applicationId``, the file's identity
-    (realpath, ``st_mtime_ns``, ``st_size``) and the values of the confs
-    in ``_INFERENCE_CONFS``. File identity is in the key because a path's
+    The memo key is the session's ``applicationId``, the file's
+    :func:`file_identity` and the values of the confs in
+    ``_INFERENCE_CONFS``. File identity is in the key because a path's
     content can change while a session lives: tests rewrite fixtures in
     place (a legacy-nanos ``events`` file, a table gaining a column), and
     input re-staged at a reused path (as perfbench stages its seeded
     tables) must be read with the new files' schema. The conf values are
     in it because the same footer reads as a different schema under them
     (``nanosAsLong`` turns TIMESTAMP(NANOS) into a long)."""
-    st = os.stat(p)
     key = (
         spark.sparkContext.applicationId,
-        os.path.realpath(p),
-        st.st_mtime_ns,
-        st.st_size,
+        file_identity(p),
         tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
     )
     schema = _SCHEMA_MEMO.get(key)

@@ -1744,7 +1744,7 @@ def test_copurchase_edges_symmetric(spark, tmp_path):
 
 
 def test_release_local_checkpoint_unpersists(spark):
-    """_release_local_checkpoint reaches through private Spark internals
+    """release_local_checkpoint reaches through private Spark internals
     (queryExecution().logical().rdd()) and swallows exceptions, so on an
     internals move it silently degrades to a no-op and round vectors
     accumulate until GC (ADVICE r15). Assert the reflection path still
@@ -1755,6 +1755,6 @@ def test_release_local_checkpoint_unpersists(spark):
     df = spark.range(100).localCheckpoint(eager=True)
     rdd = df._jdf.queryExecution().logical().rdd()
     assert rdd.getStorageLevel().useMemory() or rdd.getStorageLevel().useDisk()
-    ads._release_local_checkpoint(df)
+    ads.release_local_checkpoint(df)
     lvl = rdd.getStorageLevel()
     assert not lvl.useMemory() and not lvl.useDisk()

@@ -3,10 +3,32 @@ DuckDB with the same parameters bound."""
 
 from __future__ import annotations
 
+import shutil
+
+import duckdb
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
 from flink_gmall_spark.plans import api
+from flink_gmall_spark.session import tune
+from flink_gmall_spark.sources import tables
+from tests.conftest import jobs_run
 from tests.oracle import compare, duck_connection
+
+GMV_SQL = """
+SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS gmv
+FROM orders WHERE strftime(o_orderdate, '%Y-%m-%d') = '{date}'
+HAVING count(*) > 0
+"""
+
+VISITOR_STATS_BY_HOUR_SQL = """
+SELECT CAST(hour(ts) AS BIGINT) AS hr,
+       CAST(sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS BIGINT) AS pv_ct,
+       count(DISTINCT user_id) AS uv_ct
+FROM events WHERE strftime(ts, '%Y-%m-%d') = '{date}'
+GROUP BY 1
+"""
 
 
 @pytest.fixture(scope="module")
@@ -18,16 +40,7 @@ def duck(sf_dir):
 
 def test_gmv_for_date(spark, sf_dir, duck):
     df = api.gmv(spark, sf_dir, "1995-06-01")
-    compare(
-        df,
-        duck,
-        """
-        SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS gmv
-        FROM orders WHERE strftime(o_orderdate, '%Y-%m-%d') = '1995-06-01'
-        HAVING count(*) > 0
-        """,
-        name="api.gmv",
-    )
+    compare(df, duck, GMV_SQL.format(date="1995-06-01"), name="api.gmv")
 
 
 def test_visitor_stats_by_hour(spark, sf_dir, duck):
@@ -35,13 +48,7 @@ def test_visitor_stats_by_hour(spark, sf_dir, duck):
     compare(
         df,
         duck,
-        """
-        SELECT CAST(hour(ts) AS BIGINT) AS hr,
-               CAST(sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS BIGINT) AS pv_ct,
-               count(DISTINCT user_id) AS uv_ct
-        FROM events WHERE strftime(ts, '%Y-%m-%d') = '2024-01-03'
-        GROUP BY 1
-        """,
+        VISITOR_STATS_BY_HOUR_SQL.format(date="2024-01-03"),
         name="api.visitor_stats_by_hour",
     )
 
@@ -119,6 +126,98 @@ def test_province_stats_for_date(spark, sf_dir, duck):
         """,
         name="api.province_stats",
     )
+
+
+def _refresh(spark, sf_dir):
+    """One dashboard refresh: every panel once."""
+    return {
+        "gmv": lambda: api.gmv(spark, sf_dir, "1995-06-19").collect(),
+        "product_stats_by_trademark": lambda: api.product_stats_by_trademark(
+            spark, sf_dir, 5).collect(),
+        "product_stats_by_sku": lambda: api.product_stats_by_sku(
+            spark, sf_dir, 5).collect(),
+        "visitor_stats_by_hour": lambda: api.visitor_stats_by_hour(
+            spark, sf_dir, "2024-01-03").collect(),
+        "visitor_stats_by_new_flag": lambda: api.visitor_stats_by_new_flag(
+            spark, sf_dir, "2024-01-02").collect(),
+        "keyword_stats": lambda: api.keyword_stats(spark, sf_dir, 10).collect(),
+        "province_stats": lambda: api.province_stats(spark, sf_dir, "1996-03-12").collect(),
+    }
+
+
+def test_warm_refresh_runs_one_job_per_panel(spark, sf_dir):
+    """Once its table is built, a panel runs only its last step: one job."""
+    panels = _refresh(spark, sf_dir)
+    assert len(panels) == 7
+    for call in panels.values():
+        call()
+    jobs = {name: jobs_run(spark, call) for name, call in panels.items()}
+    assert sum(jobs.values()) <= 7, jobs
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_rewritten_source_rebuilds_and_releases_the_served_table(spark, sf_dir, tmp_path):
+    """Rewriting a source table in place changes the panel's answer in the
+    same session, and the superseded table's blocks are released."""
+    d = str(tmp_path)
+    p = tables.path(d, "orders")
+    shutil.copy(tables.path(sf_dir, "orders"), p)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{p}')")
+    date = "1995-06-19"
+    try:
+        compare(api.gmv(spark, d, date), con, GMV_SQL.format(date=date), name="api.gmv")
+        before = api.gmv(spark, d, date).first()["gmv"]
+        held = _persistent_rdds(spark)
+        answers = [before]
+        for factor in (2, 3):
+            served = api._SERVED["gmv"][1]
+            identity = tables.file_identity(p)
+            t = pq.read_table(tables.path(sf_dir, "orders"))
+            i = t.schema.get_field_index("o_totalprice")
+            pq.write_table(
+                t.set_column(i, "o_totalprice", pc.multiply(t["o_totalprice"], factor)), p
+            )
+            assert tables.file_identity(p) != identity
+            compare(api.gmv(spark, d, date), con, GMV_SQL.format(date=date), name="api.gmv")
+            answers.append(api.gmv(spark, d, date).first()["gmv"])
+            level = served._jdf.queryExecution().logical().rdd().getStorageLevel()
+            assert not level.useMemory() and not level.useDisk()
+            assert _persistent_rdds(spark) <= held
+        assert answers == [before, 2 * before, 3 * before], answers
+    finally:
+        con.close()
+
+
+def test_panel_under_hostile_conf_before_and_after_its_table_exists(
+    spark, sf_dir, tmp_path, duck
+):
+    """The caller's session carries the driver's hostile config on the
+    call that builds the panel's table and on the call served from it."""
+    from tests.test_tuning import HOSTILE_CONFS
+
+    d = str(tmp_path)
+    # a private copy: no earlier call in the session built its table
+    p = tables.path(d, "events")
+    shutil.copy(tables.path(sf_dir, "events"), p)
+    sql = VISITOR_STATS_BY_HOUR_SQL.format(date="2024-01-05")
+    entries = []
+    try:
+        for _ in range(2):
+            for k, v in HOSTILE_CONFS.items():
+                spark.conf.set(k, v)
+            df = api.visitor_stats_by_hour(spark, d, "2024-01-05")
+            compare(df, duck, sql, name="api.visitor_stats_by_hour")
+            entries.append(api._SERVED["visitor_stats_by_hour"])
+    finally:
+        tune(spark)
+    (key, _), served = entries
+    assert key[1] == (tables.file_identity(p),)
+    # the first call built the table, the second was served from it
+    assert served is entries[0]
 
 
 def test_observe_metrics_on_query(spark, sf_dir):

@@ -6,7 +6,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from flink_gmall_spark import pipeline
-from flink_gmall_spark.plans import dws
+from flink_gmall_spark.plans import dwd, dwm, dws
+from tests.oracle import compare, duck_connection
+
+#: materialized layer -> the oracle its registry twin is checked against
+WRITTEN_ORACLES = {
+    "dwd_page_log": dwd.ORACLE_PAGE_VIEWS,
+    "dim_order_info": dwd.ORACLE_CDC_DIM_UPSERT,
+    "dwm_order_wide": dwm.ORACLE_ORDER_WIDE,
+    "product_stats": dws.ORACLE_PRODUCT_STATS,
+}
 
 
 def test_build_warehouse_and_query(spark, sf_dir, tmp_path):
@@ -47,9 +56,14 @@ def test_build_warehouse_and_query(spark, sf_dir, tmp_path):
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, direct.collect()))
 
-    # dim upsert materialized exactly one row per order id
-    dim = spark.read.parquet(tables["dim_order_info"])
-    assert dim.count() == dim.select("id").distinct().count()
+    # every other layer, as written, equals its oracle (the dim upsert
+    # included: one row per order id, the last writer's values)
+    con = duck_connection(sf_dir)
+    try:
+        for name, sql in WRITTEN_ORACLES.items():
+            compare(spark.read.parquet(tables[name]), con, sql, name=name)
+    finally:
+        con.close()
 
 
 def test_pipeline_e2e_hourly_streams_on_every_call(spark, sf_dir):

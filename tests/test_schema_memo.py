@@ -8,7 +8,6 @@ import ast
 import datetime
 import pathlib
 import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,21 +18,7 @@ import flink_gmall_spark
 from flink_gmall_spark.sources import tables
 from flink_gmall_spark.sources.tables import load, parquet_schema
 from flink_gmall_spark.streaming import jobs
-
-
-def _jobs_run(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` runs, counted under its own job group."""
-    sc = spark.sparkContext
-    group = f"schema_memo_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import jobs_run
 
 
 def _copy_table(sf_dir, tmp_path, name):
@@ -45,8 +30,8 @@ def _copy_table(sf_dir, tmp_path, name):
 
 def test_second_load_runs_no_job(spark, sf_dir, tmp_path):
     d = _copy_table(sf_dir, tmp_path, "orders")
-    assert _jobs_run(spark, lambda: load(spark, d, "orders")) >= 1
-    assert _jobs_run(spark, lambda: load(spark, d, "orders")) == 0
+    assert jobs_run(spark, lambda: load(spark, d, "orders")) >= 1
+    assert jobs_run(spark, lambda: load(spark, d, "orders")) == 0
 
 
 def test_rewritten_table_reads_its_new_schema(spark, sf_dir, tmp_path):
@@ -101,7 +86,7 @@ def test_inference_conf_toggle_never_serves_the_other_schema(
         assert seen[0] != seen[1]
         spark.conf.set(conf, "true")
         # both settings are memoized side by side: a toggle back is free
-        assert _jobs_run(spark, lambda: parquet_schema(spark, p)) == 0
+        assert jobs_run(spark, lambda: parquet_schema(spark, p)) == 0
         assert isinstance(load(spark, str(tmp_path), "events").schema["ts"].dataType,
                           T.TimestampType)
     finally:
@@ -116,7 +101,7 @@ def test_read_stream_takes_the_memoized_schema(spark, sf_dir):
         nonlocal stream
         stream = jobs.read_stream(spark, sf_dir, "events")
 
-    assert _jobs_run(spark, read) == 0
+    assert jobs_run(spark, read) == 0
     assert stream.isStreaming
     assert stream.schema == batch.schema
 

@@ -2000,12 +2000,13 @@ def _pr_round(pr: DataFrame, und: DataFrame) -> DataFrame:
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
-    """Free an INTERMEDIATE localCheckpoint's storage once its child has
-    materialized — the iterative-loop hygiene that keeps 10 rounds from
-    holding 10 ephemeral copies of the rank vector (guide §5: unpersist
-    when done). Best-effort by design: it reaches through the LogicalRDD
-    to the checkpointed RDD, and if the internals move, GC + the
-    ContextCleaner's weak-reference sweep remain the fallback."""
+    """Free a localCheckpoint's storage once nothing reads it: an
+    INTERMEDIATE one once its child has materialized — the iterative-loop
+    hygiene that keeps 10 rounds from holding 10 ephemeral copies of the
+    rank vector (guide §5: unpersist when done) — or a superseded
+    ``plans.api`` stats table. Best-effort by design: it reaches through
+    the LogicalRDD to the checkpointed RDD, and if the internals move,
+    GC + the ContextCleaner's weak-reference sweep remain the fallback."""
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:

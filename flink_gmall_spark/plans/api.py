@@ -39,6 +39,7 @@ it calls do not.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +52,7 @@ from flink_gmall_spark.sources.tables import file_identity
 
 #: panel -> (key, served table)
 _SERVED: dict[str, tuple[tuple, DataFrame]] = {}
+_SERVED_LOCK = threading.Lock()
 
 
 def _served(
@@ -71,20 +73,23 @@ def _served(
     entries over the same tables would read the panel's cache) and
     matches plans by path, not file version. The trade is the one
     ``ads.part_pagerank_deep`` makes: blocks lost with an executor are
-    not recomputed."""
+    not recomputed. Likewise a frame a panel returned fails to collect
+    once a later call has released its table, so collect a panel's
+    answer before its sources change."""
     key = (
         spark.sparkContext.applicationId,
         tuple(file_identity(path(sf_dir, t)) for t in sources),
     )
-    hit = _SERVED.get(panel)
-    if hit is not None and hit[0] == key:
-        return hit[1]
-    # a stopped session's blocks went with its context
-    if hit is not None and hit[0][0] == key[0]:
-        ads.release_local_checkpoint(hit[1])
-    table = build(spark, sf_dir).localCheckpoint(eager=False)
-    _SERVED[panel] = (key, table)
-    return table
+    with _SERVED_LOCK:
+        hit = _SERVED.get(panel)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        # a stopped session's blocks went with its context
+        if hit is not None and hit[0][0] == key[0]:
+            ads.release_local_checkpoint(hit[1])
+        table = build(spark, sf_dir).localCheckpoint(eager=False)
+        _SERVED[panel] = (key, table)
+        return table
 
 
 def _visitor_stats_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
